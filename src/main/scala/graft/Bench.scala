@@ -92,7 +92,7 @@ object Bench {
     // so the driver's low-core comparison has a row whose speedup tracks
     // the core count — at sf0.1 no real row is compute-bound enough to
     // show parallel speedup, which is what fired r17's false-positive
-    // suspect_cpus_ignored. Pure codegen arithmetic (sha256 per row) over
+    // suspect_cpus_ignored. Pure codegen arithmetic (xxhash64 per row) over
     // an in-memory range split defaultParallelism ways: no input, no
     // cache, nothing any query reuses; ADDED to the map, nothing renamed.
     val probeSec = (1 to 2).map { _ => // min-of-2 like every corpus row

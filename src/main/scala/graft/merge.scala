@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * Scale design: the fold is ONE hash shuffle on the key. The window, both
   * aggregations and the summary⋈delta join all run on
   * `HashPartitioning(id)`, so Catalyst inserts a single Exchange; the final
-  * index⋈delta join is the only other wide stage and is co-partitioned when
-  * the index table is bucketed by id (see [[writeIndex]]). No driver-side
-  * collection anywhere — at 100 TB the fold is bounded by one shuffle of the
-  * *batch* (not the index) plus one co-partitioned merge join.
+  * index⋈delta join is the only other wide stage, and the streaming shell
+  * runs it only against the buckets the batch touches
+  * ([[graft.streaming.BucketedIndex]]). No driver-side collection anywhere
+  * — at 100 TB the fold is bounded by one shuffle of the *batch* plus a
+  * merge join against the touched slice of the index.
   */
 object Merge {
 
@@ -126,27 +127,4 @@ object Merge {
 
   def emptyIndex(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Model.indexSchema)
-
-  /** Index persistence with a fixed bucket layout: at cluster scale write
-    * the index bucketed by id so the merge join is co-partitioned and the
-    * per-batch merge shuffles only the (small) batch, never the (huge)
-    * index. On the local filesystem test harness we emulate with
-    * repartition-by-id parquet. */
-  def writeIndex(index: DataFrame, path: String, buckets: Int = 32): Unit =
-    index.repartition(buckets, col("id")).write.mode("overwrite").parquet(path)
-
-  def readIndex(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(Model.indexSchema).parquet(path)
-
-  /** The 100 TB layout: a bucketed+sorted catalog table. Joins against it
-    * on `id` read bucket metadata and skip the index-side Exchange AND
-    * sort entirely — only the incoming batch shuffles (verified by
-    * MergeSpec "bucketed index merge does not shuffle the index"). */
-  def writeIndexBucketed(index: DataFrame, table: String, buckets: Int = 32): Unit =
-    index.write.mode("overwrite")
-      .bucketBy(buckets, "id").sortBy("id")
-      .format("parquet").saveAsTable(table)
-
-  def readIndexBucketed(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
 }

@@ -8,11 +8,10 @@ import scala.jdk.CollectionConverters._
 
 /** Incremental, bucket-versioned index — the 100 TB layout.
   *
-  * The plain snapshot model (Pipeline.applyBatch) rewrites the WHOLE index
-  * every micro-batch: O(|index|) read+write per batch, which cannot survive
-  * a 100 TB index. Here the index is split into `nBuckets` hash buckets of
-  * the doc id, each bucket versioned independently (the Lucene-segment /
-  * LSM idea expressed in parquet):
+  * Rewriting the WHOLE index every micro-batch costs O(|index|) read+write
+  * per batch, which cannot survive a 100 TB index. Here the index is split
+  * into `nBuckets` hash buckets of the doc id, each bucket versioned
+  * independently (the Lucene-segment / LSM idea expressed in parquet):
   *
   *   dir/batches/b<batchId>/bucket=<k>/   parquet for bucket k as of batch
   *   dir/_MANIFEST                        "k=batchId" per live bucket

@@ -1,10 +1,9 @@
 package graft.streaming
 
-import graft.{ChangeLog, Merge}
+import graft.ChangeLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** The reference-parity CDC pipeline (SURVEY.md §3), Spark-native:
   *
@@ -13,22 +12,23 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * postPut/postDelete hooks (A1/A2)  → readStream over a change-log dir
   * 10k-op bulk size trigger (A9)     → maxFilesPerTrigger admission
   * 30 s scheduled flush (A10)        → Trigger.ProcessingTime("30 seconds")
-  * bulk upsert/delete to ES (A7/A8)  → foreachBatch MERGE into a versioned
-  *                                     parquet index snapshot
-  * reconnect + requeue (A11)         → checkpointed offsets + idempotent
-  *                                     per-batch snapshot (effective
-  *                                     exactly-once, an upgrade over the
-  *                                     reference's at-least-once —
+  * bulk upsert/delete to ES (A7/A8)  → foreachBatch fold of the batch into
+  *                                     the touched buckets of a
+  *                                     [[BucketedIndex]], published by an
+  *                                     atomic manifest swap
+  * reconnect + requeue (A11)         → checkpointed offsets + the manifest
+  *                                     header's `appliedBatch` retry-skip
+  *                                     guard (effective exactly-once, an
+  *                                     upgrade over the reference's
+  *                                     at-least-once —
   *                                     `observer6/ElasticSearchBulkOperator.java:91-99`)
   * per-row try/catch (A17)           → quarantine side-output of malformed
   *                                     mutations (`observer6/HbaseDataSyncEsObserver.java:110-112`)
   * start/stop lifecycle (A15)        → StreamingQuery handle
   *
-  * Snapshot layout: `indexDir/v<batchId>/` parquet + `indexDir/_CURRENT`
-  * pointer file. A retried batch rewrites the same versioned dir and
-  * pointer — idempotent, so checkpoint recovery gives exactly-once index
-  * state. At scale the snapshot is bucketed by id (Merge.writeIndex) so
-  * the per-batch merge join is co-partitioned; only the batch shuffles.
+  * There is one way mutations reach an index: [[startIncremental]] runs
+  * [[applyIncrementalBatch]] per micro-batch. Per-batch cost is
+  * O(batch + touched buckets), never O(index).
   */
 object Pipeline {
 
@@ -42,109 +42,47 @@ object Pipeline {
       quarantineDir: Option[String] = None,
       triggerSeconds: Int = 30, // reference flush period, `observer6/ElasticSearchBulkOperator.java:61`
       maxFilesPerTrigger: Int = 16,
-      vacuumEveryBatches: Int = 0, // incremental mode: GC superseded bucket versions every N batches (0 = never)
+      vacuumEveryBatches: Int = 0, // GC superseded bucket versions every N batches (0 = never)
       sketchDir: Option[String] = None, // maintain per-day HDR/HLL sketch tables ([[SketchTable]])
       vacuumKeepManifests: Int = 1, // vacuum grace window: newest N manifest versions survive (readAt pinning)
       compactAfterDirs: Int = 0) // auto-compact when the manifest fans out past N batch dirs (0 = manual only)
 
   object Config {
-    /** Parse from string options (e.g. spark-submit --conf graft.*). */
-    def fromMap(m: Map[String, String]): Config = Config(
-      changeLogDir = m("graft.changelog.dir"),
-      indexDir = m("graft.index.dir"),
-      checkpointDir = m("graft.checkpoint.dir"),
-      quarantineDir = m.get("graft.quarantine.dir"),
-      triggerSeconds = m.getOrElse("graft.trigger.seconds", "30").toInt,
-      maxFilesPerTrigger = m.getOrElse("graft.maxFilesPerTrigger", "16").toInt,
-      vacuumEveryBatches = m.getOrElse("graft.vacuum.everyBatches", "0").toInt,
-      sketchDir = m.get("graft.sketch.dir"),
-      vacuumKeepManifests = m.getOrElse("graft.vacuum.keepManifests", "1").toInt,
-      compactAfterDirs = m.getOrElse("graft.compact.afterDirs", "0").toInt)
-  }
-
-  def start(spark: SparkSession, cfg: Config): StreamingQuery =
-    start(spark, cfg.changeLogDir, cfg.indexDir, cfg.checkpointDir, cfg.quarantineDir,
-      Trigger.ProcessingTime(s"${cfg.triggerSeconds} seconds"), cfg.maxFilesPerTrigger,
-      cfg.sketchDir, cfg.vacuumEveryBatches)
-
-  def isMalformed = col("row_key").isNull || !col("op").isin("U", "D")
-
-  /** One micro-batch: quarantine bad rows, merge good rows, publish the
-    * next snapshot version. Public so batch jobs and tests drive the exact
-    * code the stream runs. */
-  def applyBatch(spark: SparkSession, batch: DataFrame, indexDir: String,
-                 batchId: Long, quarantineDir: Option[String] = None,
-                 sketchDir: Option[String] = None): Unit = {
-    // Sketch tables update FIRST (each publish is individually
-    // idempotent on batchId): "index published" then implies "sketches
-    // published", so a crash between the two publishes replays cleanly —
-    // the sketch side skips, the index side applies.
-    sketchDir.foreach(sd =>
-      SketchTable.updateForBatch(spark, sd, batch.filter(!isMalformed), batchId))
-    // Retry safety: _CURRENT already at this version means the previous
-    // attempt published before crashing (only the checkpoint commit was
-    // lost). Re-merging would read v<batchId> and overwrite the same path —
-    // Spark refuses ("Cannot overwrite a path that is also being read
-    // from") and the stream would never recover. Already applied: skip.
-    if (currentSnapshot(indexDir).contains(s"v$batchId")) return
-    val bad = batch.filter(isMalformed)
-    quarantineDir.foreach { qd =>
-      bad.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").parquet(s"$qd/b$batchId")
+    /** Parse from string options (e.g. spark-submit --conf graft.*). The
+      * three dirs are required; every other key falls back to the
+      * case-class default. A non-integer value fails naming its key. */
+    def fromMap(m: Map[String, String]): Config = {
+      val d = Config(
+        changeLogDir = m("graft.changelog.dir"),
+        indexDir = m("graft.index.dir"),
+        checkpointDir = m("graft.checkpoint.dir"))
+      def int(key: String, default: Int): Int = m.get(key).fold(default)(v =>
+        v.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$key must be an integer, got '$v'")))
+      d.copy(
+        quarantineDir = m.get("graft.quarantine.dir").orElse(d.quarantineDir),
+        triggerSeconds = int("graft.trigger.seconds", d.triggerSeconds),
+        maxFilesPerTrigger = int("graft.maxFilesPerTrigger", d.maxFilesPerTrigger),
+        vacuumEveryBatches = int("graft.vacuum.everyBatches", d.vacuumEveryBatches),
+        sketchDir = m.get("graft.sketch.dir").orElse(d.sketchDir),
+        vacuumKeepManifests = int("graft.vacuum.keepManifests", d.vacuumKeepManifests),
+        compactAfterDirs = int("graft.compact.afterDirs", d.compactAfterDirs))
     }
-    val good = batch.filter(!isMalformed)
-    val index = currentSnapshot(indexDir)
-      .map(v => Merge.readIndex(spark, s"$indexDir/$v"))
-      .getOrElse(Merge.emptyIndex(spark))
-    val merged = Merge.mergeBatch(index, good)
-    Merge.writeIndex(merged, s"$indexDir/v$batchId")
-    publish(indexDir, s"v$batchId")
   }
 
-  /** A1/A2 + A9/A10: the streaming shell. */
-  def start(spark: SparkSession, changeLogDir: String, indexDir: String,
-            checkpointDir: String, quarantineDir: Option[String] = None,
-            trigger: Trigger = Trigger.ProcessingTime("30 seconds"),
-            maxFilesPerTrigger: Int = 16,
-            sketchDir: Option[String] = None,
-            vacuumEveryBatches: Int = 0): StreamingQuery =
-    ChangeLog.readStreamMutations(spark, changeLogDir, maxFilesPerTrigger)
-      .writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch.sparkSession, batch, indexDir, batchId, quarantineDir, sketchDir)
-        // snapshot mode accumulates one full v<id> dir per batch — GC
-        // superseded versions on the same cadence the incremental shell
-        // uses (same reader-race tradeoff, documented there)
-        if (vacuumEveryBatches > 0 && batchId > 0 && batchId % vacuumEveryBatches == 0) {
-          vacuumSnapshots(indexDir)
-          sketchDir.foreach(SketchTable.vacuum)
-        }
-      }
-      .start()
-
-  /** Remove index snapshot versions other than `_CURRENT` (the snapshot
-    * twin of [[BucketedIndex.vacuum]] / [[SketchTable.vacuum]]). */
-  def vacuumSnapshots(indexDir: String): Unit = {
-    val keep = currentSnapshot(indexDir).getOrElse(return)
-    val root = Paths.get(indexDir)
-    if (!Files.exists(root)) return
-    FsOps.listDir(root)
-      .filter(p => p.getFileName.toString.startsWith("v") &&
-        p.getFileName.toString != keep && Files.isDirectory(p))
-      .foreach(p => FsOps.walkReverse(p).foreach(Files.delete))
-  }
+  /** A17: a mutation with no row key, or an op other than U/D (null
+    * included), goes to quarantine. Never SQL null, so every row passes
+    * exactly one of `filter(isMalformed)` / `filter(!isMalformed)`. */
+  def isMalformed = col("row_key").isNull || col("op").isNull || !col("op").isin("U", "D")
 
   /** One COMPOSED incremental micro-batch — quarantine + sketch tables +
     * bucketed index + scheduled vacuum, the full 100 TB-operator shape in
     * one body. Public so the streaming shell, batch replays, and the
-    * ScaleRound14 soak all drive the exact code (the [[applyBatch]]
-    * discipline). Ordering is load-bearing: sketches BEFORE the index,
-    * so the only torn-publish state a crash can leave is "sketches
-    * ahead", which replay converges (both publishes are individually
-    * idempotent on batchId — StreamingSpec's crash-window case). */
+    * benchmark harness all drive the exact code. Ordering is
+    * load-bearing: sketches BEFORE the index, so the only torn-publish
+    * state a crash can leave is "sketches ahead", which replay converges
+    * (both publishes are individually idempotent on batchId —
+    * StreamingSpec's crash-window case). */
   def applyIncrementalBatch(spark: SparkSession, cfg: Config, batch: DataFrame,
                             batchId: Long, nBuckets: Int = 256): Unit = {
     val bad = batch.filter(isMalformed)
@@ -152,7 +90,7 @@ object Pipeline {
       bad.withColumn("batch_id", lit(batchId))
         .write.mode("overwrite").parquet(s"$qd/b$batchId")
     }
-    // sketches before the index (see applyBatch): idempotent pair
+    // sketches before the index (see above): idempotent pair
     cfg.sketchDir.foreach(sd => SketchTable.updateForBatch(
       spark, sd, batch.filter(!isMalformed), batchId))
     // Auto-compaction needs a compaction id FRESH against every batch id
@@ -204,8 +142,8 @@ object Pipeline {
     }
   }
 
-  /** The 100 TB variant of [[start]]: per-batch cost O(batch + touched
-    * buckets) via [[BucketedIndex]] instead of a full snapshot rewrite. */
+  /** A1/A2 + A9/A10: the streaming shell. Per-batch cost
+    * O(batch + touched buckets) via [[BucketedIndex]]. */
   def startIncremental(spark: SparkSession, cfg: Config, nBuckets: Int = 256): StreamingQuery =
     ChangeLog.readStreamMutations(spark, cfg.changeLogDir, cfg.maxFilesPerTrigger)
       .writeStream
@@ -216,23 +154,4 @@ object Pipeline {
         applyIncrementalBatch(batch.sparkSession, cfg, batch, batchId, nBuckets)
       }
       .start()
-
-  /** Read the published snapshot (the "ES index" visible to queries). */
-  def readCurrent(spark: SparkSession, indexDir: String): DataFrame =
-    currentSnapshot(indexDir)
-      .map(v => Merge.readIndex(spark, s"$indexDir/$v"))
-      .getOrElse(Merge.emptyIndex(spark))
-
-  def currentSnapshot(indexDir: String): Option[String] = {
-    val p = Paths.get(indexDir, "_CURRENT")
-    if (Files.exists(p)) Some(Files.readString(p).trim) else None
-  }
-
-  private def publish(indexDir: String, version: String): Unit = {
-    Files.createDirectories(Paths.get(indexDir))
-    val tmp = Paths.get(indexDir, "_CURRENT.tmp")
-    Files.writeString(tmp, version)
-    Files.move(tmp, Paths.get(indexDir, "_CURRENT"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
 }

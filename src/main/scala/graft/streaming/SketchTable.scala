@@ -25,9 +25,9 @@ import scala.jdk.CollectionConverters._
   * by time, never by data), so the per-batch rewrite is O(sketch), the
   * same budget class as BucketedIndex's touched-bucket writes.
   *
-  * Exactly-once under retries: the `Pipeline.applyBatch` snapshot
-  * discipline — versioned dirs + an atomic `_CURRENT` pointer, skip when
-  * the pointer already names this batch id. Callers update sketches
+  * Exactly-once under retries: versioned dirs `v<batchId>` + an atomic
+  * `_CURRENT` pointer, skip when the pointer already names this batch id
+  * (this table's own publish, [[updateForBatch]]). Callers update sketches
   * BEFORE publishing the index so "index published" implies "sketches
   * published" and a crash between the two publishes replays cleanly
   * (sketch side skips, index side applies).

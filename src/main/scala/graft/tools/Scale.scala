@@ -40,13 +40,6 @@ object Scale {
     t("fold-10M-again")(
       Merge.fold(cl).write.mode("overwrite").format("noop").save())
 
-    // incremental: standing index of 200k docs + a 100k-mutation batch
-    t("index-write")(Merge.writeIndex(Merge.fold(cl), "/tmp/scale/index"))
-    val idx = Merge.readIndex(spark, "/tmp/scale/index")
-    val batch = cl.filter(col("seq") % 100 === 0)
-    t("merge-100k-batch-into-200k-index")(
-      Merge.mergeBatch(idx, batch).write.mode("overwrite").format("noop").save())
-
     // ---- incremental bucketed index: small batch into a big index ----
     import graft.streaming.BucketedIndex
     val bdir = "/tmp/scale/bucketed"
@@ -65,11 +58,6 @@ object Scale {
     val touched = t("bucketed-1k-hot-batch-into-200k-index")(
       BucketedIndex.applyBatch(spark, bdir, hotBatch, batchId = 1, nBuckets = 256))
     println(s"SCALEINFO touched ${touched.size}/256 buckets")
-    t("full-snapshot-1k-hot-batch-rewrite-all")({
-      Merge.writeIndex(
-        Merge.mergeBatch(Merge.readIndex(spark, "/tmp/scale/index"), hotBatch),
-        "/tmp/scale/index2")
-    })
 
     // ---- skew: 50% of 10M mutations on ONE key ----
     val skewed = spark.range(10_000_000).select(
@@ -742,156 +730,6 @@ object ScaleRound13 {
   }
 }
 
-/** Round-14 composed soak — the FULL reference workflow under sustained
-  * load, every piece in the same `foreachBatch` body the production
-  * stream runs ([[graft.streaming.Pipeline.applyIncrementalBatch]]):
-  * 20 batches × 1M mutations into { bucketed incremental index + per-day
-  * HDR/HLL sketch tables + quarantine }, vacuum every 5 batches, then a
-  * mixed serving battery (ES-JSON search over the materialized index +
-  * sketch-table date-range percentile/distinct reads) checked against
-  * the one-shot batch oracle over the whole 20M-row log. The reference
-  * contract this composes: `observer6/ElasticSearchBulkOperator.java:79-101`
-  * — the observable is "the index stays query-consistent while ingesting
-  * forever". Asserted: steady-state per-batch time FLAT (key space
-  * saturates at 2M docs by ~batch 4; after that every batch pays
-  * O(batch + index) with hash-scattered keys — the honest uniform-update
-  * shape — so times must plateau, not grow), mid-soak replay idempotence
-  * (the checkpoint-lost crash), and end-state equality on all three
-  * artifact families. */
-object ScaleRound14 {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.streaming.{BucketedIndex, Pipeline, SketchTable}
-
-    val root = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val cfg = Pipeline.Config(
-      changeLogDir = "unused", indexDir = s"$root/index",
-      checkpointDir = "unused", quarantineDir = Some(s"$root/quarantine"),
-      vacuumEveryBatches = 5, sketchDir = Some(s"$root/sketch"))
-
-    // one micro-batch: 1M mutations over a 2M-key space (every batch
-    // revisits ~39% of a saturated index — the steady-update regime),
-    // ~5% deletes, ~0.2% malformed (null key / bad op → quarantine),
-    // HALF a day of traffic per batch (CDC arrival order tracks event
-    // time — the incremental path applies batches in arrival order, so
-    // the one-shot (ts, seq) fold agrees exactly when ts is cross-batch
-    // monotone, as a change-capture stream's is; each sketch-table day
-    // then unions TWO batches' sketches, keeping the cross-batch
-    // union-vs-one-shot claim live), payload sizes spread over HDR
-    // buckets
-    def mkBatch(b: Int) = spark.range(1_000_000).select(
-      when(pmod(hash(col("id"), lit(b * 7 + 1)), lit(500)) === 0, lit(null: String))
-        .otherwise(concat(lit("u"), pmod(hash(col("id"), lit(b)), lit(2_000_000L))))
-        .as("row_key"),
-      when(pmod(hash(col("id"), lit(b * 7 + 2)), lit(500)) === 1, lit("X"))
-        .when(pmod(hash(col("id"), lit(b * 7 + 3)), lit(20)) === 0, lit("D"))
-        .otherwise(lit("U")).as("op"),
-      timestamp_micros(lit(1700000000000000L) + lit((b / 2).toLong) * 86400000000L +
-        lit((b % 2).toLong) * 43200000000L + (col("id") % 43000L) * 1000000L).as("ts"),
-      (lit(b.toLong * 1_000_000L) + col("id")).as("seq"),
-      array(
-        struct(lit("f").as("family"), lit("etype").as("qualifier"),
-          element_at(typedLit(Seq("purchase", "click", "view")),
-            (pmod(hash(col("id"), lit(b + 50)), lit(3)) + 1).cast("int")).as("value")),
-        struct(lit("f").as("family"), lit("val").as("qualifier"),
-          repeat(lit("x"), (pmod(hash(col("id"), lit(b + 100)), lit(500)) + 1).cast("int"))
-            .as("value"))).as("cells"))
-
-    val nBatches = 20
-    val times = (0 until nBatches).map { b =>
-      val t0 = System.nanoTime()
-      Pipeline.applyIncrementalBatch(spark, cfg, mkBatch(b), b.toLong, nBuckets = 256)
-      val dt = (System.nanoTime() - t0) / 1e9
-      println(f"SCALE soak-batch-$b%02d-1m $dt%.2f s")
-      // mid-soak crash replay: the checkpoint-commit-lost case — replaying
-      // the just-committed batch id must change nothing in either table
-      if (b == 10) {
-        val manifestBefore = BucketedIndex.readManifest(cfg.indexDir)
-        val skBefore = SketchTable.currentVersion(cfg.sketchDir.get)
-        Pipeline.applyIncrementalBatch(spark, cfg, mkBatch(b), b.toLong, nBuckets = 256)
-        require(BucketedIndex.readManifest(cfg.indexDir) == manifestBefore &&
-          SketchTable.currentVersion(cfg.sketchDir.get) == skBefore,
-          "mid-soak replay of batch 10 mutated published state")
-        println("SCALEINFO mid-soak replay of batch 10: no-op (exactly-once held)")
-      }
-      dt
-    }
-    // steady-state flatness: key space saturates by ~batch 4; the last 5
-    // batches must not exceed 1.5x the post-saturation plateau (8..12)
-    val plateau = times.slice(8, 13).sum / 5
-    val tail = times.slice(15, 20).sum / 5
-    println(f"SCALEINFO soak per-batch plateau $plateau%.2f s tail $tail%.2f s " +
-      f"ratio ${tail / plateau}%.2f")
-    require(tail <= plateau * 1.5,
-      f"per-batch time grew with history: plateau $plateau%.2f s -> tail $tail%.2f s")
-
-    // ---- one-shot batch oracle over the whole 20M-row log ----
-    val all = (0 until nBatches).map(mkBatch).reduce(_ unionByName _)
-    val good = all.filter(!Pipeline.isMalformed)
-    val folded = graft.ext.Dedup.persistOnce(Merge.fold(good))
-
-    // index == one-shot fold (20M mutations -> ~1.9M live docs), FULL doc
-    // state: (id, sorted info entries) anti-joined both ways
-    val streamedIdx = BucketedIndex.read(spark, cfg.indexDir)
-    def docState(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("id"), array_sort(map_entries(col("info"))).as("doc"))
-    val diff = Scale.t("soak-index-vs-oneshot-antijoin")(
-      docState(streamedIdx).exceptAll(docState(folded)).count() +
-        docState(folded).exceptAll(docState(streamedIdx)).count())
-    require(diff == 0L, s"index state diverged from one-shot fold: $diff rows")
-
-    // ES-JSON battery over the MATERIALIZED index vs the fold (the a19
-    // path): selective bool query, full row compare
-    val body =
-      """{"query": {"bool": {
-        |  "must": [{"term": {"info.etype": "purchase"}}],
-        |  "filter": [{"exists": {"field": "info.val"}}]}},
-        | "size": 100, "sort": ["id"]}""".stripMargin
-    def serve(df: org.apache.spark.sql.DataFrame) =
-      graft.dsl.EsQueryJson.search(df, body)
-        .select(col("id"), length(element_at(col("info"), "val")).as("n"))
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-    val servedStream = Scale.t("soak-es-query-streamed")(serve(streamedIdx))
-    val servedBatch = Scale.t("soak-es-query-oneshot")(serve(folded))
-    require(servedStream == servedBatch && servedStream.length == 100,
-      s"served ES-JSON query diverged: ${servedStream.length} vs ${servedBatch.length}")
-    println(s"SCALEINFO soak es-json served rows ${servedStream.length} == one-shot")
-
-    // sketch battery: HDR rows exact, HLL per-day estimates equal, and a
-    // date-range percentile read (sketch-sized work end to end)
-    val (bHdr, bHll) = SketchTable.oneShot(good)
-    val hdrStream = SketchTable.readHdr(spark, cfg.sketchDir.get)
-    val hdrDiff = hdrStream.exceptAll(bHdr).count() + bHdr.exceptAll(hdrStream).count()
-    require(hdrDiff == 0L, s"HDR sketch table diverged from one-shot: $hdrDiff rows")
-    val estS = SketchTable.distinctKeysByDay(spark, cfg.sketchDir.get)
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val estB = bHll.select(col("day"), hll_sketch_estimate(col("sk")).as("e"))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    require(estS == estB, "HLL distinct-keys-by-day diverged from one-shot")
-    val p = SketchTable.payloadPercentiles(spark, cfg.sketchDir.get,
-      "2023-11-15", "2023-12-05", Seq(0.5, 0.99)).collect()
-    require(p.length == 2, s"percentile read returned ${p.length} rows")
-    println(s"SCALEINFO soak sketch hdr-rows ${hdrStream.count()} days ${estS.size} " +
-      s"p50/p99 read ok; hll == one-shot on all days")
-
-    // quarantine: exactly the malformed rows, per batch
-    val qCount = spark.read.parquet(s"${cfg.quarantineDir.get}/*").count()
-    val expBad = all.filter(Pipeline.isMalformed).count()
-    require(qCount == expBad, s"quarantine $qCount != malformed $expBad")
-    println(s"SCALEINFO soak quarantined $qCount of 20M (matches malformed count)")
-
-    // vacuum held: superseded batch dirs are gone (vacuum ran at 5,10,15;
-    // batches 16..19 may still hold superseded versions - bound, not zero)
-    import scala.jdk.CollectionConverters._
-    val batchDirs = graft.streaming.FsOps.listDir(
-        java.nio.file.Paths.get(cfg.indexDir, "batches")).size
-    require(batchDirs <= 6, s"vacuum left $batchDirs batch dirs (expected <= 6)")
-    println(s"SCALEINFO soak batch dirs after vacuum: $batchDirs")
-    spark.stop()
-  }
-}
-
 /** Round-14 SKEW soak for the event/session family: ONE user with 5M
   * events (beside 10k normal users × 100 events) through sessionize /
   * funnel / transitions / paths / attribution / RFM. Every operator here
@@ -1202,129 +1040,6 @@ object ScaleRound14d {
   }
 }
 
-/** Round-15 probe: COMPACTION DEBT over a long ingest history. 100
-  * batches × 100k mutations against a 300k-key space leave the manifest
-  * fanned out over many batch dirs (every cold bucket pinned to the batch
-  * that last touched it). Measures the served battery + the physical
-  * read shape (manifest dir fan-out, live file count) at batch 10 vs
-  * batch 100, then runs [[graft.streaming.BucketedIndex.compact]] and
-  * re-measures — the maintenance job must collapse the fan-out to one
-  * dir with one file per bucket while preserving state (== the one-shot
-  * fold) and leaving ingest able to continue. */
-object ScaleRound15 {
-  import org.apache.spark.sql.DataFrame
-  import scala.jdk.CollectionConverters._
-
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.streaming.BucketedIndex
-
-    val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
-    val dir = s"$root/index"
-    // fan-out regime: with hash bucketing, any batch whose DISTINCT key
-    // count ≫ nBuckets touches every bucket and the manifest never fans
-    // out (the round-15 first cut proved that: 100k uniform keys × 64
-    // buckets stayed at ONE live dir throughout). The debt appears in
-    // TRICKLE/HOT-KEY ingest — batches over few keys — where cold
-    // buckets stay pinned to ever-older batch dirs. Model exactly that:
-    // one bulk seed of 300k keys, then 99 batches of 2k mutations over
-    // ~50 hot keys each against 1024 buckets.
-    val nBuckets = 1024
-
-    def cellsOf(b: Int) = array(
-      struct(lit("f").as("family"), lit("etype").as("qualifier"),
-        element_at(typedLit(Seq("purchase", "click", "view")),
-          (pmod(hash(col("id"), lit(b + 50)), lit(3)) + 1).cast("int")).as("value")),
-      struct(lit("f").as("family"), lit("val").as("qualifier"),
-        repeat(lit("x"), (pmod(hash(col("id"), lit(b + 100)), lit(200)) + 1).cast("int"))
-          .as("value"))).as("cells")
-
-    def mkBatch(b: Int): DataFrame =
-      if (b == 0) spark.range(300_000).select(
-        concat(lit("u"), col("id")).as("row_key"),
-        lit("U").as("op"),
-        timestamp_micros(lit(1700000000000000L) + col("id") * 1000L).as("ts"),
-        col("id").as("seq"),
-        cellsOf(0))
-      else spark.range(2_000).select(
-        concat(lit("u"), pmod(hash(col("id"), lit(b)), lit(50L)) * 6000L +
-          lit(b % 50)).as("row_key"),
-        when(pmod(hash(col("id"), lit(b * 7 + 3)), lit(25)) === 0, lit("D"))
-          .otherwise(lit("U")).as("op"),
-        timestamp_micros(lit(1700000000000000L) + lit(b.toLong) * 3600000000L +
-          (col("id") % 3500L) * 1000000L).as("ts"),
-        (lit(b.toLong * 100_000L) + col("id")).as("seq"),
-        cellsOf(b))
-
-    // physical read shape: how many batch dirs a full read globs, and how
-    // many parquet files those live bucket paths hold
-    def readShape(): (Int, Long) = {
-      val m = BucketedIndex.readManifest(dir)
-      val dirs = m.values.toSet.size
-      val files = m.toSeq.map { case (k, v) =>
-        val p = java.nio.file.Paths.get(dir, "batches", s"b$v", s"bucket=$k")
-        if (!java.nio.file.Files.exists(p)) 0L
-        else graft.streaming.FsOps.listDir(p)
-          .count(_.getFileName.toString.endsWith(".parquet")).toLong
-      }.sum
-      (dirs, files)
-    }
-
-    def serve(tag: String): Long = Scale.t(s"serve-$tag") {
-      val idx = BucketedIndex.read(spark, dir)
-      graft.dsl.EsQueryJson.search(idx,
-        """{"query": {"bool": {
-          |  "must": [{"term": {"info.etype": "purchase"}}],
-          |  "filter": [{"exists": {"field": "info.val"}}]}},
-          | "size": 100, "sort": ["id"]}""".stripMargin).collect().length.toLong +
-        idx.count()
-    }
-
-    val nBatches = 100
-    (0 until nBatches).foreach { b =>
-      val t0 = System.nanoTime()
-      BucketedIndex.applyBatch(spark, dir, mkBatch(b), b.toLong, nBuckets = nBuckets)
-      if (b > 0 && b % 10 == 0) BucketedIndex.vacuum(dir)
-      if (b == 10) {
-        val (d, f) = readShape()
-        println(f"SCALEINFO batch-10 read shape: $d batch dirs, $f live files")
-        serve("batch-10")
-      }
-      if (b % 20 == 0)
-        println(f"SCALE soak-batch-$b%03d ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    }
-    BucketedIndex.vacuum(dir)
-    val (d100, f100) = readShape()
-    println(f"SCALEINFO batch-100 read shape: $d100 batch dirs, $f100 live files")
-    val served100 = serve("batch-100")
-
-    // the maintenance compaction: one dir, one file per bucket, same state
-    val foldOracle = graft.Merge.fold(
-      (0 until nBatches).map(mkBatch).reduce(_ unionByName _))
-    Scale.t("compact-300k-docs")(
-      BucketedIndex.compact(spark, dir, compactId = 1000L, nBuckets = nBuckets))
-    BucketedIndex.vacuum(dir)
-    val (dC, fC) = readShape()
-    println(f"SCALEINFO post-compact read shape: $dC batch dirs, $fC live files")
-    val servedC = serve("post-compact")
-    require(servedC == served100, s"compaction changed the served answer: $servedC vs $served100")
-    require(dC == 1, s"compaction left $dC batch dirs")
-    // exploded (id, key, value) form: set ops reject MAP columns
-    def cells(df: DataFrame) = df.select(col("id"), explode(col("info")))
-    val diff = Scale.t("compact-vs-oracle")(
-      cells(BucketedIndex.read(spark, dir)).exceptAll(cells(foldOracle)).count() +
-        cells(foldOracle).exceptAll(cells(BucketedIndex.read(spark, dir))).count())
-    require(diff == 0L, s"compacted state diverged from the one-shot fold: $diff rows")
-
-    // ingest continues on the compacted lineage
-    BucketedIndex.applyBatch(spark, dir, mkBatch(1001), 1001L, nBuckets = nBuckets)
-    val servedAfter = serve("post-compact-ingest")
-    println(s"SCALEINFO post-compact ingest continues (served $servedAfter rows)")
-    spark.stop()
-  }
-}
-
 /** Round-16 serving-path scale probe (VERDICT item 6): synthesize a 10×
   * corpus — `documents` and `orders` replicated 10× with perturbed ids,
   * dimension tables kept 1× (the realistic fact/dim shape) — and run the
@@ -1393,85 +1108,6 @@ object ScaleRound16 {
       println(f"SCALE16 $n%-40s $t1%8.2f $t10%8.2f $r%7.2fx")
     }
     println(f"SCALE16 worst ratio: ${worst._1} ${worst._2}%.2fx")
-    spark.stop()
-  }
-}
-
-/** Round-16b streaming probe: the continuation's index features at scale —
-  * auto-compaction policy + manifest-pinned readers under a vacuum grace
-  * window — against a 300k-key standing index with hot-key trickle
-  * batches (the ScaleRound15 fan-out regime). Proves at probe scale what
-  * BucketedIndexSpec proves at unit scale: dirs-per-read stays bounded at
-  * the policy knob, and a reader pinned inside the grace window never
-  * retries while vacuum runs after every publish. */
-object ScaleRound16b {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.DataFrame
-    import graft.streaming.{BucketedIndex, Pipeline}
-    import scala.jdk.CollectionConverters._
-
-    val root = java.nio.file.Files.createTempDirectory("graft-r16b").toString
-    val dir = s"$root/index"
-    val cfg = Pipeline.Config(
-      changeLogDir = "unused", indexDir = dir, checkpointDir = "unused",
-      vacuumEveryBatches = 1, vacuumKeepManifests = 4, compactAfterDirs = 6)
-    val nBuckets = 1024
-
-    def cells(b: Int) = array(
-      struct(lit("f").as("family"), lit("v").as("qualifier"),
-        repeat(lit("x"), (pmod(hash(col("id"), lit(b + 9)), lit(120)) + 1).cast("int"))
-          .as("value"))).as("cells")
-
-    def mkBatch(b: Int): DataFrame =
-      if (b == 0) spark.range(300_000).select(
-        concat(lit("u"), col("id")).as("row_key"), lit("U").as("op"),
-        timestamp_micros(lit(1700000000000000L) + col("id") * 1000L).as("ts"),
-        col("id").as("seq"), cells(0))
-      else spark.range(2_000).select(
-        concat(lit("u"), pmod(hash(col("id"), lit(b)), lit(40L)) * 7000L +
-          lit(b % 40)).as("row_key"),
-        lit("U").as("op"),
-        timestamp_micros(lit(1700000000000000L) + lit(b.toLong) * 3600000000L +
-          (col("id") % 3500L) * 1000000L).as("ts"),
-        (lit(b.toLong * 100_000L) + col("id")).as("seq"), cells(b))
-
-    val retries = new java.util.concurrent.atomic.AtomicInteger(0)
-    val walks = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var writing = true
-    val sp = spark
-    Pipeline.applyIncrementalBatch(spark, cfg, mkBatch(0), 0, nBuckets)
-    val reader = new Thread(() => {
-      while (writing) {
-        try {
-          val pinned = BucketedIndex.readManifest(dir)
-          val n0 = BucketedIndex.readAt(sp, dir, pinned).count()
-          val n1 = BucketedIndex.readAt(sp, dir, pinned).count()
-          require(n0 == n1, s"pinned snapshot drifted: $n0 != $n1")
-          walks.incrementAndGet()
-        } catch { case _: Throwable => retries.incrementAndGet() }
-      }
-    })
-    reader.start()
-    var maxFan = 0
-    val t0 = System.nanoTime()
-    (1 until 60).foreach { b =>
-      Pipeline.applyIncrementalBatch(spark, cfg, mkBatch(b), b, nBuckets)
-      val fan = BucketedIndex.readManifest(dir).values.toSet.size
-      maxFan = math.max(maxFan, fan)
-    }
-    val ingestS = (System.nanoTime() - t0) / 1e9
-    writing = false
-    reader.join(300000)
-    val rows = BucketedIndex.read(spark, dir).count()
-    val dirsLeft = graft.streaming.FsOps.listDir(
-      java.nio.file.Paths.get(dir, "batches")).size
-    println(f"SCALE16B 60 trickle batches onto 300k keys in $ingestS%.1f s " +
-      f"(maxFan=$maxFan policy=${cfg.compactAfterDirs} dirsOnDisk=$dirsLeft rows=$rows)")
-    println(s"SCALE16B pinned reader: walks=${walks.get()} retries=${retries.get()}")
-    require(maxFan <= cfg.compactAfterDirs, s"fan-out $maxFan exceeded policy")
-    require(retries.get() == 0, s"pinned reader retried ${retries.get()} times")
     spark.stop()
   }
 }
@@ -1652,85 +1288,3 @@ object ScaleRound17c {
   }
 }
 
-/** Round-17 write-amplification accounting (VERDICT r16 item 7): the cost
-  * model an operator needs to SET the compaction knobs. For each
-  * (compactAfterDirs × keepLast) combination, run the same trickle soak
-  * and record bytes WRITTEN (every publish's batch/compact dir, at
-  * publish time) against logical bytes (the final one-dir index), plus
-  * the reader-side dirs-per-read the policy bounds. Write amp rises with
-  * aggressive compaction (each compact rewrites the whole index); read
-  * amp rises without it — the LSM tradeoff, measured. */
-object ScaleRound17d {
-  def main(args: Array[String]): Unit = {
-    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
-    import graft.streaming.{BucketedIndex, Pipeline}
-    import java.nio.file.{Files, Paths}
-
-    // a standing 20k-key index, then HOT-KEY trickle batches (200 muts
-    // over ~40 keys each): each trigger touches a few dozen of the 256
-    // buckets, so the manifest fans out and the policy knobs actually
-    // engage (a batch that touches every bucket repoints the whole
-    // manifest by itself and no knob matters — first-cut mistake)
-    val nKeys = 20000
-    val nBatches = 24
-    val nBuckets = 256
-
-    def dirBytes(p: String): Long = {
-      val root = Paths.get(p)
-      if (!Files.exists(root)) 0L
-      else {
-        val st = Files.walk(root)
-        try st.filter(Files.isRegularFile(_)).mapToLong(f => Files.size(f)).sum()
-        finally st.close()
-      }
-    }
-
-    def mutRows(i: Int, n: Int, keyPool: Int) = {
-      val rnd = new scala.util.Random(1000 + i)
-      val hot = Seq.fill(40)(rnd.nextInt(keyPool))
-      (0 until n).map { j =>
-        val k = f"k${if (i == 0) j else hot(rnd.nextInt(hot.size))}%06d"
-        val seq = i.toLong * 1000000 + j
-        graft.Mutation(k, "U", new java.sql.Timestamp(1700000000000L + seq),
-          seq, Seq(graft.Cell("f", "q" + (j % 3), s"v$seq")))
-      }
-    }
-    def batch(i: Int) = {
-      import spark.implicits._
-      (if (i == 0) mutRows(0, nKeys, nKeys) else mutRows(i, 200, nKeys)).toDF()
-    }
-
-    println(f"${"compactAfter"}%12s ${"keepLast"}%8s ${"written(MB)"}%12s " +
-      f"${"logical(MB)"}%12s ${"writeAmp"}%9s ${"peakDisk(MB)"}%13s ${"maxDirs"}%8s ${"sec"}%7s")
-    for (compactAfter <- Seq(0, 4, 8); keepLast <- Seq(1, 4)) {
-      val dir = Files.createTempDirectory(s"graft-wamp-c$compactAfter-k$keepLast").toString
-      val cfg = Pipeline.Config(
-        changeLogDir = "unused", indexDir = dir, checkpointDir = "unused",
-        vacuumEveryBatches = 1, vacuumKeepManifests = keepLast,
-        compactAfterDirs = compactAfter)
-      var written = 0L
-      var peakDisk = 0L
-      var maxDirs = 0
-      val t0 = System.nanoTime()
-      (0 until nBatches).foreach { i =>
-        val before = BucketedIndex.manifestVersions(dir).toSet
-        Pipeline.applyIncrementalBatch(spark, cfg, batch(i), i, nBuckets)
-        // every NEW manifest version's dir was written this trigger
-        (BucketedIndex.manifestVersions(dir).toSet -- before)
-          .foreach(v => written += dirBytes(s"$dir/batches/b$v"))
-        peakDisk = math.max(peakDisk, dirBytes(s"$dir/batches"))
-        maxDirs = math.max(maxDirs, BucketedIndex.readManifest(dir).values.toSet.size)
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // logical size: a single full compaction of the end state
-      val logicalDir = Files.createTempDirectory("graft-wamp-logical").toString
-      graft.Merge.writeIndex(BucketedIndex.read(spark, dir), logicalDir, buckets = nBuckets)
-      val logical = dirBytes(logicalDir)
-      println(f"WAMP $compactAfter%8d $keepLast%8d ${written / 1e6}%12.1f " +
-        f"${logical / 1e6}%12.1f ${written.toDouble / logical}%9.2f " +
-        f"${peakDisk / 1e6}%13.1f $maxDirs%8d $sec%7.1f")
-    }
-    spark.stop()
-  }
-}

@@ -71,28 +71,4 @@ class MergeModelSpec extends AnyFunSuite with SparkTestBase {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop)
     assert(res.passed, res.status.toString)
   }
-
-  test("stateful-fold transition == simulation under SHUFFLED random splits (ScalaCheck)") {
-    import graft.streaming.StatefulFold
-    // unlike mergeBatch (commit order), the state transition must converge
-    // for ANY arrival order across ANY batch boundaries — pure function, no
-    // Spark job per case
-    val prop = Prop.forAll(genLog, Gen.choose(1, 6), Gen.long) { (log, nBatches, seed) =>
-      val arrival = new scala.util.Random(seed).shuffle(log)
-      val chunks = arrival.grouped(math.max(1, arrival.size / nBatches)).toSeq
-      val perKey = scala.collection.mutable.Map[String, StatefulFold.DocState]()
-      for (c <- chunks; (key, muts) <- c.groupBy(_.row_key))
-        perKey(key) = StatefulFold.fold(
-          perKey.getOrElse(key,
-            StatefulFold.DocState(Long.MinValue, Long.MinValue, Long.MinValue, Long.MinValue, Map.empty)),
-          muts)
-      val got = perKey.collect {
-        case (k, st) if StatefulFold.alive(st) =>
-          k -> st.cells.map { case (q, c) => q -> c.value }
-      }.toMap
-      got == simulate(log)
-    }
-    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop)
-    assert(res.passed, res.status.toString)
-  }
 }

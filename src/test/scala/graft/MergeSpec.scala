@@ -73,39 +73,6 @@ class MergeSpec extends AnyFunSuite with SparkTestBase {
     assert(indexMap(once) == indexMap(twice))
   }
 
-  test("bucketed index merge does not shuffle the index side") {
-    spark.sql("DROP TABLE IF EXISTS graft_index_test")
-    val loc = new java.io.File("spark-warehouse/graft_index_test")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
-    val idx = Merge.fold(mutDf(Seq(
-      mut("k1", "U", "2024-01-01 00:00:00", 1, ("f", "a", "1")),
-      mut("k2", "U", "2024-01-01 00:00:01", 2, ("f", "b", "2")))))
-    Merge.writeIndexBucketed(idx, "graft_index_test", buckets = 4)
-    val table = Merge.readIndexBucketed(spark, "graft_index_test")
-    val batch = mutDf(Seq(mut("k1", "U", "2024-01-01 00:00:02", 3, ("f", "a", "9"))))
-    val merged = Merge.mergeBatch(table, batch)
-    assert(indexMap(merged) == Map("k1" -> Map("a" -> "9"), "k2" -> Map("b" -> "2")))
-    // the scan of the bucketed table must reach the join without an
-    // Exchange: its parent chain up to the join is Sort only
-    val plan = merged.queryExecution.executedPlan.toString
-    assert(plan.contains("Bucketed: true"), s"expected bucketed scan in:\n$plan")
-    val lines = plan.linesIterator.toVector
-    val scanIdx = lines.indexWhere(l => l.contains("FileScan") && l.contains("graft_index_test"))
-    assert(scanIdx > 1, s"no bucketed FileScan found:\n$plan")
-    val joinIdx = lines.lastIndexWhere(_.contains("SortMergeJoin"), scanIdx)
-    assert(joinIdx >= 0, s"no SortMergeJoin above the bucketed scan:\n$plan")
-    val between = lines.slice(joinIdx + 1, scanIdx).mkString("\n")
-    assert(!between.contains("Exchange"),
-      s"index side must feed the join without an Exchange:\n$plan")
-    spark.sql("DROP TABLE graft_index_test")
-  }
-
   test("batch-split invariance: any split of a random log folds identically") {
     val rnd = new Random(42)
     val keys = (1 to 20).map(i => s"k$i")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.Pipeline
+import graft.streaming.{BucketedIndex, Pipeline, SketchTable}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,26 +26,27 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       mut("u3", "U", "2024-01-01 00:00:03", 4, ("f", "b", "3"), ("f", "c", "4")),
       mut("u1", "U", "2024-01-01 00:00:04", 5, ("f", "z", "9")),
       Mutation(null, "U", ts("2024-01-01 00:00:05"), 6, Seq(Cell("f", "bad", "x"))), // quarantined
-      mut("u2", "X", "2024-01-01 00:00:06", 7, ("f", "bad", "y"))) // bad op → quarantined
+      mut("u2", "X", "2024-01-01 00:00:06", 7, ("f", "bad", "y")), // bad op → quarantined
+      mut("u4", null, "2024-01-01 00:00:07", 8, ("f", "bad", "z"))) // null op → quarantined
 
-    val indexDir = tmpDir("graft-index")
-    val qDir = tmpDir("graft-quarantine")
+    val cfg = Pipeline.Config(changeLogDir = "unused", indexDir = tmpDir("graft-index"),
+      checkpointDir = "unused", quarantineDir = Some(tmpDir("graft-quarantine")))
     val ms = MemoryStream[Mutation]
     val q = ms.toDF().writeStream
       .outputMode("update")
       .option("checkpointLocation", tmpDir("graft-ckpt"))
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Pipeline.applyBatch(b.sparkSession, b, indexDir, id, Some(qDir))
+        Pipeline.applyIncrementalBatch(b.sparkSession, cfg, b, id, nBuckets = 4)
       }
       .start()
 
     // three uneven micro-batches
     ms.addData(log.slice(0, 2)); q.processAllAvailable()
     ms.addData(log.slice(2, 3)); q.processAllAvailable()
-    ms.addData(log.slice(3, 7)); q.processAllAvailable()
+    ms.addData(log.slice(3, 8)); q.processAllAvailable()
     q.stop()
 
-    val streamed = indexMap(Pipeline.readCurrent(spark, indexDir))
+    val streamed = indexMap(BucketedIndex.read(spark, cfg.indexDir))
     val batch = indexMap(Merge.fold(mutDf(log).filter(!Pipeline.isMalformed)))
     assert(streamed == batch)
     assert(streamed == Map(
@@ -53,12 +54,11 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "u2" -> Map("a" -> "2"),
       "u3" -> Map("b" -> "3", "c" -> "4")))
 
-    val quarantined = spark.read.parquet(s"$qDir/*").count()
-    assert(quarantined == 2)
+    val quarantined = spark.read.parquet(s"${cfg.quarantineDir.get}/*").count()
+    assert(quarantined == 3)
   }
 
   test("streaming sketch tables == one-shot batch sketches, across batch splits") {
-    import graft.streaming.SketchTable
     val sp = spark
     import sp.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
@@ -79,24 +79,23 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     def hllEst(df: org.apache.spark.sql.DataFrame) =
       df.select(col("day"), hll_sketch_estimate(col("sk")))
         .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    def runSplit(splits: Seq[Seq[Int]]): (String, String) = {
-      val indexDir = tmpDir("graft-sk-index")
-      val sketchDir = tmpDir("graft-sk-sketch")
+    def runSplit(splits: Seq[Seq[Int]]): String = {
+      val cfg = Pipeline.Config(changeLogDir = "unused", indexDir = tmpDir("graft-sk-index"),
+        checkpointDir = "unused", sketchDir = Some(tmpDir("graft-sk-sketch")))
       val ms = MemoryStream[Mutation]
       val q = ms.toDF().writeStream
         .outputMode("update")
         .option("checkpointLocation", tmpDir("graft-sk-ckpt"))
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          Pipeline.applyBatch(b.sparkSession, b, indexDir, id,
-            quarantineDir = None, sketchDir = Some(sketchDir))
+          Pipeline.applyIncrementalBatch(b.sparkSession, cfg, b, id, nBuckets = 4)
         }
         .start()
       splits.foreach { ix => ms.addData(ix.map(log)); q.processAllAvailable() }
       q.stop()
-      (indexDir, sketchDir)
+      cfg.sketchDir.get
     }
-    val (_, skA) = runSplit(Seq(Seq(0, 1), Seq(2, 3, 4), Seq(5, 6, 7)))
-    val (_, skB) = runSplit(Seq(Seq(0), Seq(1, 2, 3, 4, 5), Seq(6), Seq(7)))
+    val skA = runSplit(Seq(Seq(0, 1), Seq(2, 3, 4), Seq(5, 6, 7)))
+    val skB = runSplit(Seq(Seq(0), Seq(1, 2, 3, 4, 5), Seq(6), Seq(7)))
     val (bHdr, bHll) = SketchTable.oneShot(mutDf(log).filter(!Pipeline.isMalformed))
     // HDR: integer buckets union losslessly — EXACT row equality with the
     // one-shot twin, independent of the split
@@ -129,65 +128,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(hdrRows(SketchTable.readHdr(spark, skA)) == before, "vacuum must not touch _CURRENT")
   }
 
-  test("applyBatch retry after publish is a no-op (stream can recover)") {
-    // Crash between publish and checkpoint commit → the stream re-runs the
-    // same batch id. Re-merging would read v<id> and overwrite the same
-    // path (Spark refuses); the retry must instead skip.
-    val indexDir = tmpDir("graft-index-retry")
-    val b0 = mutDf(Seq(mut("u1", "U", "2024-01-01 00:00:00", 1, ("f", "a", "1"))))
-    val b1 = mutDf(Seq(mut("u2", "U", "2024-01-01 00:00:01", 2, ("f", "a", "2"))))
-    Pipeline.applyBatch(spark, b0, indexDir, 0)
-    Pipeline.applyBatch(spark, b1, indexDir, 1)
-    val once = indexMap(Pipeline.readCurrent(spark, indexDir))
-    def partFiles() = java.nio.file.Files.list(java.nio.file.Paths.get(indexDir, "v1"))
-      .iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
-    val filesBefore = partFiles()
-    Pipeline.applyBatch(spark, b1, indexDir, 1) // retry — must not throw or rewrite
-    assert(partFiles() == filesBefore, "retry rewrote the published snapshot")
-    assert(indexMap(Pipeline.readCurrent(spark, indexDir)) == once)
-    assert(once == Map("u1" -> Map("a" -> "1"), "u2" -> Map("a" -> "2")))
-  }
-
-  test("flatMapGroupsWithState fold == batch fold under shuffled arrival and uneven batches") {
-    val sp = spark
-    import sp.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    import graft.streaming.StatefulFold
-    val rnd = new scala.util.Random(11)
-    val keys = (1 to 12).map(i => s"k$i")
-    val log = (1 to 300).map { seq =>
-      val key = keys(rnd.nextInt(keys.size))
-      if (rnd.nextDouble() < 0.25) mut(key, "D", f"2024-01-01 00:${seq / 60}%02d:${seq % 60}%02d", seq)
-      else mut(key, "U", f"2024-01-01 00:${seq / 60}%02d:${seq % 60}%02d", seq,
-        ("f", Seq("a", "b", "c")(rnd.nextInt(3)), s"v$seq"))
-    }
-    val arrival = rnd.shuffle(log) // late/duplicate-order delivery across batches
-    val ms = MemoryStream[Mutation]
-    val last = scala.collection.mutable.Map[String, StatefulFold.DocUpdate]()
-    val q = StatefulFold.updates(ms.toDS()).writeStream
-      .outputMode("update")
-      .option("checkpointLocation", tmpDir("graft-sfold-ckpt"))
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[StatefulFold.DocUpdate], _: Long) =>
-        b.collect().foreach(u => last(u.id) = u)
-      }
-      .start()
-    Seq(arrival.slice(0, 40), arrival.slice(40, 45), arrival.slice(45, 300)).foreach { chunk =>
-      ms.addData(chunk); q.processAllAvailable()
-    }
-    q.stop()
-    val expected = indexMap(Merge.fold(mutDf(log))) // alive docs only
-    val aliveGot = last.collect { case (id, u) if u.alive => id -> u.info }.toMap
-    assert(aliveGot == expected)
-    // every key that ever appeared has an emission; dead ones are tombstones
-    assert(last.keySet == log.map(_.row_key).toSet)
-    last.values.filterNot(_.alive).foreach(u => assert(!expected.contains(u.id)))
-  }
-
   test("incremental stream vacuums superseded bucket versions on schedule") {
     val sp = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.BucketedIndex
     val cfg = Pipeline.Config(
       changeLogDir = "unused", indexDir = tmpDir("graft-vac-idx"),
       checkpointDir = tmpDir("graft-vac-ckpt"), vacuumEveryBatches = 2)
@@ -222,7 +165,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // values. Vacuum runs every 3 batches — a reader that raced a vacuum
     // into deleted files retries (the documented grace-window contract);
     // what it must NEVER see is a SUCCESSFUL read of a torn state.
-    import graft.streaming.BucketedIndex
     val dir = tmpDir("graft-concread-idx")
     val nBatches = 25
     val torn = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -290,7 +232,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // loops pin → 3 page reads → verify stability. ANY exception in the
     // reader is a failed contract (the old reader needed catch-and-retry
     // here; StreamingSpec's concread test shows those retries firing).
-    import graft.streaming.BucketedIndex
     val dir = tmpDir("graft-grace-idx")
     val nBatches = 25
     val retries = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -374,25 +315,25 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   test("restart from checkpoint continues exactly-once") {
     val sp = spark
-    val changeDir = tmpDir("graft-changes-r")
-    val indexDir = tmpDir("graft-index-r")
-    val ckpt = tmpDir("graft-ckpt-r")
+    val cfg = Pipeline.Config(changeLogDir = tmpDir("graft-changes-r"),
+      indexDir = tmpDir("graft-index-r"), checkpointDir = tmpDir("graft-ckpt-r"),
+      triggerSeconds = 1)
     mutDf(Seq(
       mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "1")),
       mut("b", "U", "2024-01-01 00:00:01", 2, ("f", "y", "2"))))
-      .write.mode("append").parquet(changeDir)
-    val q1 = Pipeline.start(sp, changeDir, indexDir, ckpt)
+      .write.mode("append").parquet(cfg.changeLogDir)
+    val q1 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
     q1.processAllAvailable(); q1.stop()
-    assert(indexMap(Pipeline.readCurrent(sp, indexDir)) ==
+    assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) ==
       Map("a" -> Map("x" -> "1"), "b" -> Map("y" -> "2")))
     // new files arrive while the stream is DOWN; restart picks up only them
     mutDf(Seq(
       mut("a", "D", "2024-01-01 00:00:02", 3),
       mut("c", "U", "2024-01-01 00:00:03", 4, ("f", "z", "9"))))
-      .write.mode("append").parquet(changeDir)
-    val q2 = Pipeline.start(sp, changeDir, indexDir, ckpt)
+      .write.mode("append").parquet(cfg.changeLogDir)
+    val q2 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
     q2.processAllAvailable(); q2.stop()
-    assert(indexMap(Pipeline.readCurrent(sp, indexDir)) ==
+    assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) ==
       Map("b" -> Map("y" -> "2"), "c" -> Map("z" -> "9")))
   }
 
@@ -401,29 +342,29 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // replay of any batch id whose checkpoint commit was lost) must leave
     // the sketch table equal to the one-shot sketch of the WHOLE log —
     // no double-counted days, no missed batches
-    import graft.streaming.SketchTable
     val sp = spark
-    val changeDir = tmpDir("graft-changes-skr")
-    val indexDir = tmpDir("graft-index-skr")
-    val sketchDir = tmpDir("graft-sketch-skr")
-    val ckpt = tmpDir("graft-ckpt-skr")
+    val cfg = Pipeline.Config(changeLogDir = tmpDir("graft-changes-skr"),
+      indexDir = tmpDir("graft-index-skr"), checkpointDir = tmpDir("graft-ckpt-skr"),
+      triggerSeconds = 1, sketchDir = Some(tmpDir("graft-sketch-skr")))
+    val sketchDir = cfg.sketchDir.get
     val part1 = Seq(
       mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "payload-one")),
       mut("b", "U", "2024-01-02 00:00:01", 2, ("f", "y", "pp")))
     val part2 = Seq(
       mut("a", "D", "2024-01-02 00:00:02", 3),
       mut("c", "U", "2024-01-03 00:00:03", 4, ("f", "z", "a-much-longer-payload")))
-    mutDf(part1).write.mode("append").parquet(changeDir)
-    val q1 = Pipeline.start(sp, changeDir, indexDir, ckpt, sketchDir = Some(sketchDir))
+    mutDf(part1).write.mode("append").parquet(cfg.changeLogDir)
+    val q1 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
     q1.processAllAvailable(); q1.stop()
-    mutDf(part2).write.mode("append").parquet(changeDir)
-    val q2 = Pipeline.start(sp, changeDir, indexDir, ckpt, sketchDir = Some(sketchDir))
+    mutDf(part2).write.mode("append").parquet(cfg.changeLogDir)
+    val q2 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
     q2.processAllAvailable(); q2.stop()
     // ALSO simulate the crash-replay: re-apply the last batch id manually
     // (the checkpoint-commit-lost case) — must be a no-op
-    Pipeline.applyBatch(sp, mutDf(part2), indexDir,
-      batchId = SketchTable.currentVersion(sketchDir).get.stripPrefix("v").toLong,
-      sketchDir = Some(sketchDir))
+    Pipeline.applyIncrementalBatch(sp, cfg, mutDf(part2),
+      batchId = BucketedIndex.readHeader(cfg.indexDir)("appliedBatch").toLong, nBuckets = 4)
+    assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) ==
+      indexMap(Merge.fold(mutDf(part1 ++ part2))))
     val (bHdr, bHll) = SketchTable.oneShot(mutDf(part1 ++ part2))
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(rows(SketchTable.readHdr(sp, sketchDir)) == rows(bHdr))
@@ -436,15 +377,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("crash BETWEEN sketch publish and index publish: replay converges both tables") {
-    // The torn-publish window SketchTable.scala documents: applyBatch
-    // publishes sketches FIRST, then the index. A crash in between leaves
-    // sketches at v<id> and the index one version behind. On restart the
-    // stream replays the batch id: the sketch side must SKIP (already
-    // published — re-unioning would double-count the batch), the index
-    // side must APPLY. After replay both tables equal the one-shot fold.
-    import graft.streaming.SketchTable
-    val indexDir = tmpDir("graft-torn-idx")
-    val sketchDir = tmpDir("graft-torn-sk")
+    // The torn-publish window SketchTable.scala documents:
+    // applyIncrementalBatch publishes sketches FIRST, then the index. A
+    // crash in between leaves sketches at v<id> and the index one batch
+    // behind. On restart the stream replays the batch id: the sketch side
+    // must SKIP (already published — re-unioning would double-count the
+    // batch), the index side must APPLY. After replay both tables equal
+    // the one-shot fold.
+    val cfg = Pipeline.Config(changeLogDir = "unused", indexDir = tmpDir("graft-torn-idx"),
+      checkpointDir = "unused", sketchDir = Some(tmpDir("graft-torn-sk")))
+    val sketchDir = cfg.sketchDir.get
+    def appliedBatch() = BucketedIndex.readHeader(cfg.indexDir).get("appliedBatch")
     val b0 = Seq(
       mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "payload-one")),
       mut("b", "U", "2024-01-02 00:00:01", 2, ("f", "y", "pp")))
@@ -452,17 +395,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       mut("a", "U", "2024-01-02 00:00:02", 3, ("f", "x", "reissued")),
       mut("c", "U", "2024-01-03 00:00:03", 4, ("f", "z", "a-much-longer-payload")),
       mut("b", "D", "2024-01-03 00:00:04", 5))
-    Pipeline.applyBatch(spark, mutDf(b0), indexDir, 0, sketchDir = Some(sketchDir))
+    Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b0), 0, nBuckets = 4)
     // ---- batch 1, TORN: the sketch publish happens, then "crash" ----
     SketchTable.updateForBatch(spark, sketchDir, mutDf(b1).filter(!Pipeline.isMalformed), 1L)
     assert(SketchTable.currentVersion(sketchDir).contains("v1"))
-    assert(Pipeline.currentSnapshot(indexDir).contains("v0"),
+    assert(appliedBatch().contains("0"),
       "fixture must model the torn window: sketches ahead of the index")
-    // ---- restart: the checkpoint replays batch id 1 through applyBatch ----
-    Pipeline.applyBatch(spark, mutDf(b1), indexDir, 1, sketchDir = Some(sketchDir))
-    assert(Pipeline.currentSnapshot(indexDir).contains("v1"))
+    // ---- restart: the checkpoint replays batch id 1 ----
+    Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b1), 1, nBuckets = 4)
+    assert(appliedBatch().contains("1"))
     // index == one-shot batch fold
-    assert(indexMap(Pipeline.readCurrent(spark, indexDir)) ==
+    assert(indexMap(BucketedIndex.read(spark, cfg.indexDir)) ==
       indexMap(Merge.fold(mutDf(b0 ++ b1))))
     // sketches == one-shot over the whole log (no double-counted batch 1)
     val (bHdr, bHll) = SketchTable.oneShot(mutDf(b0 ++ b1))
@@ -475,9 +418,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(est == expEst)
     // the OTHER torn shape never exists by ordering: index at v<id> with
     // sketches behind would double-apply sketches on replay — assert the
-    // invariant applyBatch maintains (sketch version >= index version)
+    // invariant applyIncrementalBatch maintains (sketch version >= the
+    // index's applied batch)
     val sv = SketchTable.currentVersion(sketchDir).get.stripPrefix("v").toLong
-    val iv = Pipeline.currentSnapshot(indexDir).get.stripPrefix("v").toLong
+    val iv = appliedBatch().get.toLong
     assert(sv >= iv)
   }
 
@@ -498,30 +442,26 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(indexMap(Merge.fold(ChangeLog.readCsv(sp, cdir))) == want)
   }
 
-  test("file-stream shell end-to-end with processing-time trigger") {
-    val sp = spark
-    val changeDir = tmpDir("graft-changes")
-    val log = mutDf(Seq(
-      mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "1")),
-      mut("b", "U", "2024-01-01 00:00:01", 2, ("f", "y", "2")),
-      mut("a", "D", "2024-01-01 00:00:02", 3)))
-    log.write.mode("overwrite").parquet(changeDir)
-
-    val indexDir = tmpDir("graft-index2")
-    val q = Pipeline.start(sp, changeDir, indexDir, tmpDir("graft-ckpt2"),
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
-    q.processAllAvailable()
-    q.stop()
-    assert(indexMap(Pipeline.readCurrent(sp, indexDir)) == Map("b" -> Map("y" -> "2")))
-    // snapshot vacuum keeps only the published version
-    Pipeline.applyBatch(sp, mutDf(Seq(
-      mut("c", "U", "2024-01-01 00:00:03", 4, ("f", "z", "3")))), indexDir, 99L)
-    Pipeline.vacuumSnapshots(indexDir)
-    def vdirs() = java.nio.file.Files.list(java.nio.file.Paths.get(indexDir))
-      .iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("v")).toSet
-    assert(vdirs() == Set("v99"))
-    assert(indexMap(Pipeline.readCurrent(sp, indexDir)) ==
-      Map("b" -> Map("y" -> "2"), "c" -> Map("z" -> "3")))
+  test("Config.fromMap: defaults from the case class, each key overrides, bad ints name their key") {
+    val req = Map("graft.changelog.dir" -> "cl", "graft.index.dir" -> "idx",
+      "graft.checkpoint.dir" -> "ck")
+    val base = Pipeline.Config(changeLogDir = "cl", indexDir = "idx", checkpointDir = "ck")
+    assert(Pipeline.Config.fromMap(req) == base)
+    val overrides = Seq(
+      "graft.quarantine.dir" -> ("q", base.copy(quarantineDir = Some("q"))),
+      "graft.trigger.seconds" -> ("7", base.copy(triggerSeconds = 7)),
+      "graft.maxFilesPerTrigger" -> ("3", base.copy(maxFilesPerTrigger = 3)),
+      "graft.vacuum.everyBatches" -> ("5", base.copy(vacuumEveryBatches = 5)),
+      "graft.sketch.dir" -> ("sk", base.copy(sketchDir = Some("sk"))),
+      "graft.vacuum.keepManifests" -> ("4", base.copy(vacuumKeepManifests = 4)),
+      "graft.compact.afterDirs" -> ("6", base.copy(compactAfterDirs = 6)))
+    overrides.foreach { case (k, (v, want)) =>
+      assert(Pipeline.Config.fromMap(req + (k -> v)) == want, k)
+    }
+    overrides.map(_._1).filterNot(_.endsWith(".dir")).foreach { k =>
+      val e = intercept[IllegalArgumentException](Pipeline.Config.fromMap(req + (k -> "ten")))
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
   }
 
   test("startIncremental maintains sketch tables alongside the bucketed index") {
@@ -529,7 +469,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // shell: sketches update in the same foreachBatch as the index, and
     // the scheduled vacuum sweeps both artifact families
     val sp = spark
-    import graft.streaming.SketchTable
     val changeDir = tmpDir("graft-sk-changes")
     val log = Seq(
       mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "pay")),
@@ -551,7 +490,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val got = SketchTable.readHdr(sp, sd).collect().map(_.toString).sorted.toSeq
     assert(got == bHdr.collect().map(_.toString).sorted.toSeq)
     // index state and sketch vacuum both held
-    assert(indexMap(graft.streaming.BucketedIndex.read(sp, cfg.indexDir)) ==
+    assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) ==
       Map("b" -> Map("y" -> "load")))
   }
 
@@ -563,7 +502,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // index SERVES an ES-JSON search that must equal the same body over
     // the one-shot batch fold (the a18/a19 composed-system observable).
     val sp = spark
-    import graft.streaming.{BucketedIndex, SketchTable}
     val changeDir = tmpDir("graft-comp-changes")
     val log = Seq(
       mut("u1", "U", "2024-01-01 08:00:00", 1, ("f", "etype", "purchase"), ("f", "val", "45.0")),
