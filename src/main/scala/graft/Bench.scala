@@ -15,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   * the same query in both passes, minutes apart, has never been observed.
   *
   * Prints ONE raw JSON line (build.sbt routes forked stdout unprefixed) and
-  * also writes it to bench_full.json next to the repo for post-hoc reads. */
+  * also writes it, with full query names, next to the repo for post-hoc
+  * reads: bench_full.json for the sf0.1 gate dir, bench_full_<dir>.json
+  * for any other dir (an sf0.001 smoke run writes bench_full_sf0.001.json,
+  * so it never replaces the gate record). */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -150,10 +153,12 @@ object Bench {
     // keeping the contract prefix intact. A tail window now always ends
     // with a regex-recoverable `"metric":"total","value":N`.
     val summary = s""""metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed"""
-    val line = s"""{$summary,"queries":${qmap(shortNames, fmt)},"names":"abbrev; full in bench_full.json","sf":"$sfDir",$summary}"""
+    val sfName = new java.io.File(sfDir).getName
+    val fullFile = if (sfName == "sf0.1") "bench_full.json" else s"bench_full_$sfName.json"
+    val line = s"""{$summary,"queries":${qmap(shortNames, fmt)},"names":"abbrev; full in $fullFile","sf":"$sfDir",$summary}"""
     val fullLine = s"""{$summary,"queries":${qmap(identity, fmt)},"passes":$passes,"sf":"$sfDir"}"""
     if (only.isEmpty) try { // subset runs must not clobber the full record
-      val w = new java.io.PrintWriter("bench_full.json")
+      val w = new java.io.PrintWriter(fullFile)
       try w.println(fullLine) finally w.close()
     } catch { case _: Throwable => () }
     spark.stop()

@@ -226,16 +226,6 @@ object Similarity {
     * ([[graft.functions.VecOps.QuantizeInt8]]). */
   def quantizeInt8(e: Column): Column = graft.functions.VecOps.quantizeInt8(e)
 
-  /** Interpreted HOF formulation of [[quantizeInt8]] — kept ONLY as the
-    * equivalence-spec twin (per-element lambdas re-evaluate `scale` for
-    * every element; never use in a hot path). */
-  def quantizeInt8Hof(e: Column): (Column, Column) = {
-    val scale = aggregate(e, lit(0.0d),
-      (acc, x) => greatest(acc, abs(x.cast("double")))) / 127.0
-    val q = transform(e, x => round(x.cast("double") / scale).cast("int"))
-    (scale, q)
-  }
-
   /** C1d at scale: embedding-cosine near-dup via sign-random-projection
     * LSH — NO all-pairs product anywhere in the plan. Each vector gets
     * nBits/bandBits band values from md5-derived ±1 hyperplanes
@@ -259,7 +249,7 @@ object Similarity {
                               nBits: Int = 60, bandBits: Int = 5,
                               dim: Int = 64, hotBandCap: Int = 256): DataFrame = {
     val nBands = nBits / bandBits
-    // Collapse IDENTICAL sign signatures first (ScaleRound17 find: a
+    // Collapse IDENTICAL sign signatures first (a round-17 10× probe find: a
     // dup-heavy corpus — every doc replicated m ways — multiplied each
     // band bucket by m and the self-join by m², 84× wall at 10× data).
     // Band-sharing is a property of the SIGNATURE, so the pairwise stage

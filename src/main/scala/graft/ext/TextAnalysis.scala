@@ -50,16 +50,6 @@ object TextAnalysis {
     graft.functions.TextKernels.langIdLabel(
       text, langMarkers.map(_._1), langMarkers.map(_._2))
 
-  /** The r16 interpreted-HOF formulation, kept ONLY as the
-    * equivalence-spec twin of [[langId]] (never use in a hot path). */
-  private[graft] def langIdHof(text: Column): Column = {
-    val toks = tokens(text)
-    val scores = langMarkers.map { case (l, ms) => l -> markerScore(toks, ms) }
-    val mx = greatest(scores.map(_._2): _*)
-    scores.foldRight(lit("und")) { case ((l, s), acc) => when(mx > 0 && s === mx, lit(l)).otherwise(acc) }
-  }
-  // fold-Right so earlier languages win ties: when-chains evaluate in order
-
   /** Mixed-language / code-switch detection: language-ID the two halves
     * of the token stream independently; halves that disagree flag docs
     * whose content switches language midway (concatenated-crawl

@@ -20,13 +20,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   */
 object VecOps {
 
-  /** Σ a[i]·b[i] in double, element order. Null if either side is null. */
+  /** Σ a[i]·b[i] in double, element order. Null if either side is null
+    * or the two arrays differ in length (the null contract shared by
+    * [[DotProductDouble]] and [[SqDistDouble]]: the `zip_with` HOF form
+    * these kernels replaced returned null there too, so a wrong-dimension
+    * query vector surfaces as a null score, never as a prefix result). */
   case class DotProductFloat(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+      val n = x.numElements()
+      if (n != y.numElements()) return null
       var acc = 0.0; var i = 0
       while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
       acc
@@ -35,12 +41,16 @@ object VecOps {
       nullSafeCodeGen(ctx, ev, (a, b) => {
         val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
         s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  double $acc = 0.0;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
+           |  }
+           |  ${ev.value} = $acc;
            |}
-           |${ev.value} = $acc;
            |""".stripMargin
       })
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -52,9 +62,11 @@ object VecOps {
   case class DotProductDouble(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+      val n = x.numElements()
+      if (n != y.numElements()) return null
       var acc = 0.0; var i = 0
       while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
       acc
@@ -63,12 +75,16 @@ object VecOps {
       nullSafeCodeGen(ctx, ev, (a, b) => {
         val n = ctx.freshName("n"); val i = ctx.freshName("i"); val acc = ctx.freshName("acc")
         s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += $a.getDouble($i) * $b.getDouble($i);
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  double $acc = 0.0;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    $acc += $a.getDouble($i) * $b.getDouble($i);
+           |  }
+           |  ${ev.value} = $acc;
            |}
-           |${ev.value} = $acc;
            |""".stripMargin
       })
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
@@ -203,21 +219,15 @@ object VecOps {
     * the k-means / ANN assignment hot paths with a codegen'd loop.
     * Numerics identical: same per-element expression, same accumulation
     * order (the HOF and the DuckDB oracle both fold left in element order).
-    *
-    * LENGTH CONTRACT: computes over min(len(a), len(b)) elements — a
-    * PREFIX distance on mismatched arrays, where the zip_with HOF form
-    * returned null. Every call site in this engine feeds equal-dimension
-    * vectors (fixed-dim embeddings vs same-dim centroids/literals), so
-    * the branch is unreachable here; callers introducing variable-length
-    * inputs must length-check upstream rather than rely on a null
-    * surfacing a dimension bug. (Same contract as [[DotProductDouble]]/
-    * [[DotProductFloat]] above.) */
+    * Null on arrays of different length, as [[DotProductFloat]]. */
   case class SqDistDouble(left: Expression, right: Expression)
       extends BinaryExpression {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     override def nullSafeEval(a: Any, b: Any): Any = {
       val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+      val n = x.numElements()
+      if (n != y.numElements()) return null
       var acc = 0.0; var i = 0
       while (i < n) { val d = x.getDouble(i) - y.getDouble(i); acc += d * d; i += 1 }
       acc
@@ -227,13 +237,17 @@ object VecOps {
         val n = ctx.freshName("n"); val i = ctx.freshName("i")
         val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
         s"""
-           |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $d = $a.getDouble($i) - $b.getDouble($i);
-           |  $acc += $d * $d;
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  double $acc = 0.0;
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    double $d = $a.getDouble($i) - $b.getDouble($i);
+           |    $acc += $d * $d;
+           |  }
+           |  ${ev.value} = $acc;
            |}
-           |${ev.value} = $acc;
            |""".stripMargin
       })
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -17,20 +17,12 @@ object Transform {
     *    in cell-array order.
     *
     * Batched kernel (one JVM call per row, no shuffle). The equivalent
-    * higher-order-function formulation is kept below for the equivalence
-    * spec — HOFs evaluate interpreted, which made this the ingest hot spot.
+    * higher-order-function formulation is the spec's reference twin
+    * (`HofTwins.flattenCellsHof` under `src/test`) — HOFs evaluate
+    * interpreted, which made this the ingest hot spot.
     */
   def flattenCells(cells: Column): Column =
     graft.functions.TextKernels.cellsToMap(cells)
-
-  /** HOF twin of [[flattenCells]] (spec reference implementation). */
-  def flattenCellsHof(cells: Column): Column =
-    aggregate(
-      cells,
-      map().cast("map<string,string>"),
-      (acc, c) => map_concat(
-        map_filter(acc, (k, _) => k =!= c.getField("qualifier")),
-        map(c.getField("qualifier"), c.getField("value"))))
 
   /** A6: nest the flattened map under the constant `info` field
     * (`infoJson.put("info", json)`, `observer6/HbaseDataSyncEsObserver.java:104`). */

@@ -312,4 +312,49 @@ class KernelEquivalenceSpec extends AnyFunSuite {
     }
     assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop).passed)
   }
+
+  test("vector kernels: equal lengths match the element-order fold; mismatched lengths are null (interpreted + codegen)") {
+    import graft.functions.VecOps.{DotProductDouble, DotProductFloat, SqDistDouble}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
+    val fT = ArrayType(FloatType, containsNull = false)
+    val dT = ArrayType(DoubleType, containsNull = false)
+    // (kernel over two bound array columns, element type, reference fold)
+    val kernels: Seq[(String, Expression, Boolean, (Seq[Double], Seq[Double]) => Double)] = Seq(
+      ("DotProductFloat", DotProductFloat(BoundReference(0, fT, true), BoundReference(1, fT, true)),
+        true, (a, b) => a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }),
+      ("DotProductDouble", DotProductDouble(BoundReference(0, dT, true), BoundReference(1, dT, true)),
+        false, (a, b) => a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }),
+      ("SqDistDouble", SqDistDouble(BoundReference(0, dT, true), BoundReference(1, dT, true)),
+        false, (a, b) => a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + (x - y) * (x - y) }))
+    val genVec: Gen[Seq[Double]] = Gen.choose(0, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.choose(-4, 4).map(_.toDouble / 2)))
+    for ((name, k, isFloat, ref) <- kernels) {
+      assert(k.nullable, s"$name must declare nullable: it returns null on a length mismatch")
+      val codegen = GenerateMutableProjection.generate(Seq(k))
+      def arr(v: Seq[Double]): AnyRef =
+        if (v == null) null
+        else if (isFloat) new GenericArrayData(v.map(_.toFloat).toArray)
+        else new GenericArrayData(v.toArray)
+      def both(a: Seq[Double], b: Seq[Double]): (Any, Any) = {
+        val row = InternalRow(arr(a), arr(b))
+        val c = codegen(row)
+        (k.eval(row), if (c.isNullAt(0)) null else c.getDouble(0))
+      }
+      val prop = Prop.forAll(genVec, genVec) { (a, b) =>
+        val (interp, gen) = both(a, b)
+        val want = if (a.length == b.length) ref(a, b) else null
+        interp == want && gen == want
+      }
+      assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(300), prop).passed, name)
+      // pinned cases: a wrong-dimension query is null, never a prefix result
+      assert(both(Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0)) == ((null, null)), name)
+      assert(both(Seq.empty, Seq(1.0)) == ((null, null)), name)
+      assert(both(null, Seq(1.0)) == ((null, null)), name)
+      assert(both(Seq.empty, Seq.empty) == ((0.0, 0.0)), name)
+    }
+  }
 }

@@ -234,7 +234,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
 
   test("QuantizeInt8 kernel matches the HOF formulation bit-for-bit") {
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val (scaleH, qH) = Similarity.quantizeInt8Hof(col("embedding"))
+    val (scaleH, qH) = HofTwins.quantizeInt8Hof(col("embedding"))
     val hof = e.select(col("vec_id"), scaleH.as("scale"), qH.as("q"))
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getSeq[Int](2).toSeq)).toSeq
@@ -441,7 +441,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     val real = ChangeLog.readEvents(spark, "/root/testdata/sf0.001")
     val a = real.select(Transform.flattenCells(col("cells")).as("m")).collect()
       .map(r => Option(r.getMap[String, String](0)).map(_.toMap))
-    val b = real.select(Transform.flattenCellsHof(col("cells")).as("m")).collect()
+    val b = real.select(HofTwins.flattenCellsHof(col("cells")).as("m")).collect()
       .map(r => Option(r.getMap[String, String](0)).map(_.toMap))
     assert(a.toSeq == b.toSeq)
     // null value kept, null qualifier dropped, empty array → empty map
@@ -596,7 +596,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .toDF("text")
     val both = df.select(
       TextAnalysis.langId(col("text")).as("k"),
-      TextAnalysis.langIdHof(col("text")).as("h")).collect()
+      HofTwins.langIdHof(col("text")).as("h")).collect()
     both.foreach(r => assert(r.getString(0) == r.getString(1),
       s"kernel=${r.getString(0)} hof=${r.getString(1)}"))
   }
