@@ -41,20 +41,18 @@ object Bench {
       materialize(li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy("l_returnflag").count())
     } catch { case _: Throwable => () }
-    // shared-fixture builds (TIMED — r18, VERDICT r17 item 3): the
-    // memoized cross-query fixtures (TierA index fold; TierC LSH pairs,
-    // k-means fit, image/audio hashes, ANN twins; TierB nested items)
-    // used to materialize here OUTSIDE the timed region, so no declared
-    // row paid their build cost. They are now reported as their own
-    // bench row "warm_shared" and COUNTED IN THE TOTAL — fixture-family
-    // rows measure marginal cost, and the shared build is accounted
-    // once, explicitly, in the same JSON line.
-    // r18: the TierA index fold moved INSIDE warmShared so all seven
-    // independent fixture builds overlap on a small thread pool (guide
-    // §2.6) instead of running serially; the timed span is unchanged.
+    // shared-fixture builds (TIMED): every fixture in
+    // queries.Fixtures.all, reported as the bench row "warm_shared" and
+    // COUNTED IN THE TOTAL, so fixture-family rows measure marginal cost
+    // and the shared build is accounted once, explicitly. Per-fixture
+    // seconds go to the full record as "warm_shared_fixtures".
     val w0 = System.nanoTime()
-    try queries.TierC.warmShared(spark, sfDir)
-    catch { case _: Throwable => () }
+    val fixtureSec =
+      try queries.TierC.warmShared(spark, sfDir)
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warm_shared failed: ${e.getMessage}")
+        Nil
+      }
     val warmSec = (System.nanoTime() - w0) / 1e9
 
     // fixed sorted order: a hash-Map iteration order would shift which
@@ -142,8 +140,8 @@ object Bench {
       val dups = m.values.groupBy(identity).collect { case (v, g) if g.size > 1 => v }.toSet
       m.map { case (k, v) => k -> (if (dups(v)) k else v) }
     }
-    def qmap(keyOf: String => String, f: Double => String): String =
-      results.map { case (k, v) => "\"" + keyOf(k) + "\":" + f(v) }
+    def qmap(kv: Seq[(String, Double)], keyOf: String => String = identity): String =
+      kv.map { case (k, v) => "\"" + keyOf(k) + "\":" + fmt(v) }
         .mkString("{", ",", "}")
     // The duplicated trailing summary keys (metric/value/unit/failed after
     // "sf") are deliberate: the ~6 kB line overflows ~2 kB tail-capture
@@ -155,8 +153,8 @@ object Bench {
     val summary = s""""metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed"""
     val sfName = new java.io.File(sfDir).getName
     val fullFile = if (sfName == "sf0.1") "bench_full.json" else s"bench_full_$sfName.json"
-    val line = s"""{$summary,"queries":${qmap(shortNames, fmt)},"names":"abbrev; full in $fullFile","sf":"$sfDir",$summary}"""
-    val fullLine = s"""{$summary,"queries":${qmap(identity, fmt)},"passes":$passes,"sf":"$sfDir"}"""
+    val line = s"""{$summary,"queries":${qmap(results, shortNames)},"names":"abbrev; full in $fullFile","sf":"$sfDir",$summary}"""
+    val fullLine = s"""{$summary,"queries":${qmap(results)},"warm_shared_fixtures":${qmap(fixtureSec)},"passes":$passes,"cpus":$cpus,"sf":"$sfDir"}"""
     if (only.isEmpty) try { // subset runs must not clobber the full record
       val w = new java.io.PrintWriter(fullFile)
       try w.println(fullLine) finally w.close()

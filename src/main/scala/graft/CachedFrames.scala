@@ -2,21 +2,22 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-/** Registry for the library's long-lived persisted frames (the memoized
-  * shared inputs in TierA/TierC and the intra-operator persists that
-  * outlive their operator call, e.g. [[graft.ext.Sketch.cmsHeavyHitters]]'s
-  * counts). Harmless in the bench harness — the JVM exits — but a
-  * long-lived server process accumulates cached blocks across
-  * sessions/scale factors; `CachedFrames.clear()` is the teardown hook
-  * that unpersists everything and resets the memo maps. */
+/** Registry for the library's long-lived persisted frames (the shared
+  * corpus inputs of [[graft.queries.Fixtures]] and the intra-operator
+  * persists that outlive their operator call, e.g.
+  * [[graft.ext.Sketch.cmsHeavyHitters]]'s counts). Harmless in the bench
+  * harness — the JVM exits — but a long-lived server process accumulates
+  * cached blocks across sessions/scale factors; `CachedFrames.clear()` is
+  * the teardown hook that unpersists everything and drops the fixture
+  * memo entries. */
 object CachedFrames {
 
   private val cleanups =
     new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]
 
-  /** Register a cleanup thunk (unpersist + memo-map reset) to run on
-    * [[clear]]. */
-  def onClear(f: () => Unit): Unit = { cleanups.add(f); () }
+  /** Register a cleanup thunk to run on [[clear]] (the fixture registry's
+    * memo reset; [[track]] for frames). */
+  private[graft] def onClear(f: () => Unit): Unit = { cleanups.add(f); () }
 
   /** Track one persisted frame: it is unpersisted at the next [[clear]].
     * Returns the frame for inline use. */
@@ -47,7 +48,7 @@ object CachedFrames {
   // serving driver) accumulates hundreds of cached frames whose eviction
   // churn and GC pressure tax every later query. Harness drop point:
   // after each query's action, dropScratch() releases them while the
-  // MEMOIZED cross-query fixtures above (registered via track/onClear)
+  // cross-query fixtures (graft.queries.Fixtures, released by clear())
   // stay cached.
 
   private val scratchFrames =

@@ -100,21 +100,6 @@ object Classifier {
     (-1L, b, 0.0) +: w.toSeq.zipWithIndex.map { case (wv, j) => (j.toLong, wv, mu(j)) }
   }
 
-  /** Train-once artifact cache (driver-side, dim+1 rows — bounded): the
-    * apply step of a production quality filter scores with a PERSISTED
-    * trained model; retraining per downstream query is the wrong shape
-    * at any scale. Keyed by the caller's training-input identity +
-    * hyperparameters. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Double, Double)]]()
-
-  def trainLogRegCached(cacheKey: String, docs: => DataFrame, id: => Column,
-                        text: => Column, label: => Column, dim: Int = 64,
-                        iters: Int = 5,
-                        lr: Double = 8.0): Seq[(Long, Double, Double)] =
-    modelCache.computeIfAbsent(s"$cacheKey|$dim|$iters|$lr",
-      _ => trainLogRegRows(docs, id, text, label, dim, iters, lr))
-
   /** Score documents with a trained model (weights + centering means
     * broadcast as literal arrays; one narrow pass + one dot-product agg):
     * per doc the 6-dp probability and the thresholded keep/drop decision —

@@ -21,10 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Persist unless this (canonical) plan is already cached — a re-run of
-    * the same query (e.g. the bench's two-pass protocol) re-uses the cache
-    * instead of re-registering it and logging "Asked to cache already
-    * cached data". */
   /** Sentence-level shared-boilerplate signal (CCNet dedups at PARAGRAPH
     * granularity; this is the same pipeline at sentence granularity —
     * `[.!?]+` segmentation instead of fixed token windows, the natural
@@ -84,6 +80,10 @@ object Dedup {
     if (splits >= par) df else df.repartition(par, key)
   }
 
+  /** Persist unless this (canonical) plan is already cached — a re-run of
+    * the same query (e.g. the bench's two-pass protocol) re-uses the cache
+    * instead of re-registering it and logging "Asked to cache already
+    * cached data". */
   private[graft] def persistOnce(df: DataFrame): DataFrame =
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       graft.CachedFrames.scratch(df.persist())

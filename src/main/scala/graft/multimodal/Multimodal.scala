@@ -134,7 +134,7 @@ object Multimodal {
     * zlib/deflate; these are not hand-laid header bytes like c18's). */
   def encodeTestImages(ids: DataFrame)(implicit spark: SparkSession): DataFrame = {
     // NOT fanned (guide §2.5 would suggest it, but measured): the image
-    // table is small and memoized once (TierC.imageHashFixture), so a
+    // table is small and memoized once (Fixtures.imageHash), so a
     // repartition + 32-way sort bought c78 nothing measurable while the
     // range-exchange sampling pass put a 2× parallelism tax on the tiny
     // c77 row; the WAV encoders additionally contend on global

@@ -15,18 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object TierA {
 
-  /** The folded index is the shared input of a13/a18/a19 — memoized and
-    * persisted per (session, sfDir) so each corpus run folds once. */
-  private val indexCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def index(spark: SparkSession, sfDir: String): DataFrame =
-    indexCache.getOrElseUpdate((spark, sfDir), {
-      graft.CachedFrames.onClear(() => { indexCache.remove((spark, sfDir)); () })
-      graft.CachedFrames.track(
-        Merge.fold(ChangeLog.readEvents(spark, sfDir)).persist())
-    })
-
   /** A3+A4+A5+A6: per-mutation flatten. One row per (mutation, qualifier)
     * with last-wins dedup inside the mutation; no cross-row state. */
   def flatten(spark: SparkSession, sfDir: String): DataFrame = {
@@ -42,7 +30,7 @@ object TierA {
     * 'error' event deletes the whole doc; later events resurrect it; per
     * qualifier the last write (by ts, seq) wins. */
   def mergeFold(spark: SparkSession, sfDir: String): DataFrame = {
-    index(spark, sfDir)
+    Fixtures.indexFold(spark, sfDir)
       .select(col("id"), explode(col("info")).as(Seq("qualifier", "value")))
       .orderBy("id", "qualifier")
   }
@@ -149,7 +137,7 @@ object TierA {
     * the change-log, then term + exists + range over the dynamic map docs. */
   def indexQuery(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.dsl.EsDsl
-    index(spark, sfDir)
+    Fixtures.indexFold(spark, sfDir)
       .filter(EsDsl.term(element_at(col("info"), "etype"), "purchase") &&
         EsDsl.existsKey(col("info"), "val") &&
         element_at(col("info"), "val").cast("double") >= 30.0)
@@ -161,7 +149,7 @@ object TierA {
   /** The full reference-user workflow: an ES-JSON search body executed over
     * the materialized index (the API surface an ES 6.5 user migrates with). */
   def esJsonQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.dsl.EsQueryJson.search(index(spark, sfDir),
+    graft.dsl.EsQueryJson.search(Fixtures.indexFold(spark, sfDir),
       """{"query": {"bool": {
         |  "must": [{"term": {"info.etype": "click"}},
         |           {"range": {"info.val": {"gte": "20"}}}],

@@ -16,38 +16,15 @@ object TierB {
   private def li(s: SparkSession, d: String) = Tables.lineitem(s, d)
   private def ord(s: SparkSession, d: String) = Tables.orders(s, d)
 
-  /** Shared nested-items fixture (r18): the per-order child-doc array the
-    * ES nested/parent-child family (a28/a79/a94/a103/a113/a122/a131/a143/
-    * b24) each rebuilt with its own collect_list groupBy over lineitem —
-    * the dominant cost of every row in the family. ONE superset-struct
-    * collect is memoized + persisted per (session, sfDir) — the same §5
-    * reuse pattern as the TierA index memo — and each query projects its
-    * declared element shape with a narrow codegen transform(), so the
-    * heavy groupBy shuffle runs once per session instead of nine times.
-    * Results are unchanged: element projection preserves per-order array
-    * order, no consumer outputs the array itself, and every consumer is
-    * child-order-insensitive (nested EXISTS/count/min-mode/sum/avg over
-    * integer-valued quantities) or re-sorts children to an explicit total
-    * order (a143). Warmed via [[TierC.warmShared]]'s TIMED bench block. */
-  private val itemsCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
-  private[queries] def liItemsAll(s: SparkSession, d: String): DataFrame =
-    itemsCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { itemsCache.remove((s, d)); () })
-      graft.CachedFrames.track(
-        li(s, d).groupBy(col("l_orderkey"))
-          .agg(collect_list(struct(col("l_quantity"), col("l_returnflag"),
-            col("l_discount"), col("l_extendedprice"),
-            col("l_linenumber"))).as("_items"))
-          .persist())
-    })
-
-  /** The family's per-query view of [[liItemsAll]]: `(l_orderkey, <name>:
-    * array<struct<fields…>>)` via a narrow element projection. */
+  /** The nested family's per-query view of [[Fixtures.liItemsAll]]:
+    * `(l_orderkey, <name>: array<struct<fields…>>)` via a narrow element
+    * projection. Results match a per-query collect_list: the projection
+    * preserves per-order array order, no consumer outputs the array
+    * itself, and every consumer is child-order-insensitive or re-sorts
+    * children to an explicit total order (a143). */
   private[queries] def liItems(s: SparkSession, d: String, name: String,
                                fields: String*): DataFrame =
-    liItemsAll(s, d).select(col("l_orderkey"),
+    Fixtures.liItemsAll(s, d).select(col("l_orderkey"),
       transform(col("_items"),
         x => struct(fields.map(f => x.getField(f).as(f)): _*)).as(name))
 

@@ -161,179 +161,19 @@ object TierC {
        |c2 AS (${update("a2")})""".stripMargin
   }
 
-  private val NUM_HASHES = 16
-  private val BAND_SIZE = 2
-
-  /** Verified LSH near-dup pairs are the shared input of c02_minhash_lsh
-    * and c02_dedup_apply — memoized and persisted per (session, sfDir) so
-    * a corpus run computes the sketch pipeline once (the TierA.index
-    * pattern). */
-  private val lshPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Cached at threshold 0 (ALL verified candidates) so the c72 sweep and
-    * the ≥0.5 consumers share one pipeline; the 0.5 filter is free. */
-  private def lshPairsAll(s: SparkSession, d: String): DataFrame =
-    lshPairsCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { lshPairsCache.remove((s, d)); () })
-      graft.CachedFrames.track(
-        Dedup.minhashLsh(Tables.documents(s, d), col("doc_id"), col("text"),
-          numHashes = NUM_HASHES, bandSize = BAND_SIZE, threshold = 0.0).persist())
-    })
-
-  private def lshPairs(s: SparkSession, d: String): DataFrame =
-    lshPairsAll(s, d).filter(col("jac") >= 0.5)
-
-  /** Materialize the memoized shared inputs (Bench warm-up hook, so
-    * per-query numbers don't depend on which member of a fixture-sharing
-    * family runs first — the c02/c32 rationale, now covering ALL the
-    * memoized fixtures: without it the first image row (c77) pays the
-    * whole codec fixture build and gate-compares 1.9× against rounds
-    * where a sibling happened to pay it). */
-  def warmShared(s: SparkSession, d: String): Unit = {
-    // The seven fixture builds are INDEPENDENT jobs: running them
-    // serially leaves most cores idle in each job's straggler tail
-    // (guide §2.6 "overlap independent jobs"). A small pool keeps 3 in
-    // flight — enough to back-fill tails, not enough to thrash executor
-    // memory. Memo maps are TrieMaps keyed per fixture and CachedFrames
-    // queues are concurrent, so concurrent getOrElseUpdate is safe.
-    // Per-fixture seconds go to stderr: warm_shared is a TIMED bench row
-    // (r18), so its internal breakdown must stay observable.
-    val work: Seq[(String, () => Unit)] = Seq(
-      ("indexFold", () => { TierA.index(s, d).count(); () }),
-      ("lshPairs", () => { lshPairsAll(s, d).count(); () }),
-      ("kmeansFit8", () => { kmeansFit8(s, d).count(); () }),
-      ("imageHash", () => { imageHashFixture(s, d).count(); () }),
-      ("audioHash", () => { audioHashFixture(s, d).count(); () }),
-      ("annFixture", () => { annFixture(s, d)._1.count(); () }),
-      ("liItems", () => { TierB.liItemsAll(s, d).count(); () }))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val futs = work.map { case (label, body) =>
-        label -> pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            val t0 = System.nanoTime()
-            body()
-            System.err.println(
-              f"[warmShared] $label ${(System.nanoTime() - t0) / 1e9}%.3f s")
-          }
-        })
-      }
-      futs.foreach { case (_, f) => f.get() } // propagate the first failure
-    } finally pool.shutdown()
-    // bpeByte (c134/c135's shared merge table) runs SERIAL, after the
-    // pool drains: the trainer is a driver loop of ~13 small sequential
-    // jobs, and inside the pool each would queue behind the big fixture
-    // jobs, inflating warm_shared well past the trainer's ~1.4 s solo
-    // cost. Still inside warmShared's timed span — the shared training
-    // is accounted once, explicitly (VERDICT r17 item 3).
-    val t0 = System.nanoTime()
-    bpeByteMerges6(s, d).count()
-    System.err.println(
-      f"[warmShared] bpeByte ${(System.nanoTime() - t0) / 1e9}%.3f s")
-  }
-
-  /** The (k=8, iters=2) embedding k-means fit is the shared input of
-    * c32 (fit output) and c90 (silhouette gate) — memoized and persisted
-    * per (session, sfDir) like the LSH pairs, so the Lloyd rounds run
-    * once per corpus pass. */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def kmeansFit8(s: SparkSession, d: String): DataFrame =
-    kmeansCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { kmeansCache.remove((s, d)); () })
-      graft.CachedFrames.track(
-        Similarity.kmeansFit(Tables.embeddings(s, d),
-          col("vec_id"), col("embedding"), k = 8, iters = 2).persist())
-    })
-
-  /** The byte-level BPE merge table (nMerges = 6) is the shared input of
-    * c134 (the table itself) and c135 (train→encode round trip) — the
-    * SAME trainer invocation ran twice per corpus pass before r18. The
-    * result is a bounded driver-local table (6 rows; [[TextAnalysis
-    * .bpeTrainByteLevel]] collects each round's argmax), so the memo
-    * skips re-running the six training rounds, the §5-reuse pattern of
-    * the k-means fit (c32/c36/c90). Built in [[warmShared]]'s TIMED
-    * block, so the shared training cost is accounted once, explicitly. */
-  private val bpeByteCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private[queries] def bpeByteMerges6(s: SparkSession, d: String): DataFrame =
-    bpeByteCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { bpeByteCache.remove((s, d)); () })
-      TextAnalysis.bpeTrainByteLevel(Tables.documents(s, d), col("text"),
-        nMerges = 6)
-    })
-
-  /** The planted-twin ANN gate fixture (corpus + twins, coarse + PQ
-    * codebooks, query vectors) is the shared input of c80 (ADC recall)
-    * and c120 (re-rank) — memoized per (session, sfDir) so the codebook
-    * fits run once. */
-  /** The c125 audio fixture hashed once per (session, sfDir): the real
-    * JDK WAV encode+decode of every doc (plus twins) dominates the row's
-    * cost and is a pure function of the corpus — memoized like the ANN
-    * fixture, registered for teardown. */
-  private val audioHashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def audioHashFixture(s: SparkSession, d: String): DataFrame =
-    audioHashCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { audioHashCache.remove((s, d)); () })
-      implicit val sp: SparkSession = s
-      graft.CachedFrames.track(Multimodal.audioEnergyHash(
-        Multimodal.encodeTestWavsTwinned(Tables.documents(s, d))).persist())
-    })
-
-  /** The c77/c78/c79 image aHash table memoized once per (session,
-    * sfDir) — the image twin of [[audioHashFixture]]: the real JDK
-    * codec encode+decode of every doc dominates all three rows' cost
-    * and is a pure function of the corpus. */
-  private val imageHashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def imageHashFixture(s: SparkSession, d: String): DataFrame =
-    imageHashCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { imageHashCache.remove((s, d)); () })
-      implicit val sp: SparkSession = s
-      graft.CachedFrames.track(Multimodal.imageAHash(
-        Multimodal.encodeTestImages(Tables.documents(s, d))).persist())
-    })
-
-  private val annFixtureCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-      (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Map[Long, Seq[Double]])]
-
+  private[queries] val NUM_HASHES = 16
+  private[queries] val BAND_SIZE = 2
   private[queries] val annQids = Seq(5L, 123L, 240L)
 
-  private def annFixture(s: SparkSession, d: String)
-      : (DataFrame, Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Map[Long, Seq[Double]]) =
-    annFixtureCache.getOrElseUpdate((s, d), {
-      graft.CachedFrames.onClear(() => { annFixtureCache.remove((s, d)); () })
-      val e0 = Tables.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-      // one scan × an exploded twin index replaces the old 30-branch
-      // union (one filtered scan per (qid, t) — 30 scan subtrees in the
-      // plan). Identical values: hash(vec_id, _t, j) sees the same
-      // (long, int, int)-typed children the per-branch literals fed it.
-      val twins = e0.filter(col("vec_id").isin(annQids: _*))
-        .select(col("vec_id"), col("embedding"),
-          explode(array((0 until 10).map(lit): _*)).as("_t"))
-        .select(
-          (lit(10000L) + col("vec_id") * lit(100L) + col("_t").cast("long")).as("vec_id"),
-          transform(col("embedding"), (x, j) => x * (lit(1.0) +
-            (pmod(hash(col("vec_id"), col("_t"), j), lit(2001)) - 1000)
-              .cast("double") / 50000.0)).as("embedding"))
-      val e = graft.CachedFrames.track(e0.unionAll(twins).persist())
-      val coarse = Similarity.pqCodebookFromIds(e, col("vec_id"), col("embedding"),
-        m = 1, k = 8).head
-      val cb = Similarity.pqCodebookFromIds(e, col("vec_id"), col("embedding"),
-        m = 8, k = 16)
-      val qvs = e.filter(col("vec_id").isin(annQids: _*))
-        .select(col("vec_id"), col("embedding"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      (e, coarse, cb, qvs)
-    })
+  private def lshPairs(s: SparkSession, d: String): DataFrame =
+    Fixtures.lshPairsAll(s, d).filter(col("jac") >= 0.5)
+
+  /** Build and materialize every shared input in [[Fixtures.all]] (the
+    * bench warm-up hook, so per-query numbers don't depend on which member
+    * of a fixture-sharing family runs first). Returns each fixture's wall
+    * seconds, in registry order. */
+  def warmShared(s: SparkSession, d: String): Seq[(String, Double)] =
+    Fixtures.warmAll(s, d)
 
   private val sigCte = {
     val hs = (0 until NUM_HASHES)
@@ -1504,7 +1344,7 @@ object TierC {
       // gate (array output crashes the driver comparer); the `+ 0.0`
       // normalizes -0.0 so both engines print "0.000000". SimilaritySpec
       // covers the array form.
-      (s, d) => kmeansFit8(s, d)
+      (s, d) => Fixtures.kmeansFit8(s, d)
         .withColumn("centroid",
           concat_ws("|", transform(col("centroid"),
             x => format_string("%.6f", x + lit(0.0)))))
@@ -1528,7 +1368,7 @@ object TierC {
       // the Lloyd rounds; assignment inlines the same 6-dp centroids, so
       // the result is bit-identical to an inline fit (oracle-pinned).
       (s, d) => Similarity.semDedupWithCentroids(Tables.embeddings(s, d),
-        kmeansFit8(s, d).select(col("cluster"), col("centroid")).collect()
+        Fixtures.kmeansFit8(s, d).select(col("cluster"), col("centroid")).collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).toSeq
           .sortBy(_._1),
         threshold = 0.45)
@@ -1680,7 +1520,7 @@ object TierC {
 
     // FastText-style classifier TRAINING, distributed (the GPT-3/CCNet
     // quality-filter step): hashed bag-of-words + full-batch logistic
-    // regression, 3 GD iterations, every per-row value and aggregate
+    // regression, 5 GD iterations, every per-row value and aggregate
     // rounded to 6 dp so the DuckDB replay is bit-identical (the c32
     // k-means protocol). The label distills a Gopher-style lexical-
     // diversity rule (>= 26 distinct tokens, ~48% positive) into the
@@ -1692,11 +1532,7 @@ object TierC {
     Q("c39_quality_classifier_train",
       (s, d) => {
         import s.implicits._
-        graft.ext.Classifier.trainLogRegCached(d,
-          Tables.documents(s, d), col("doc_id"), col("text"),
-          size(array_distinct(TextAnalysis.tokens(col("text")))) >= 26,
-          dim = 64, iters = 5)
-          .toDF("feature", "weight", "mu").orderBy("feature")
+        Fixtures.qualityModel(s, d).toDF("feature", "weight", "mu").orderBy("feature")
       },
       Some(s"""WITH ${logRegSqlCtes(64)}
              |SELECT CAST(-1 AS BIGINT) AS feature, (SELECT b FROM bb5) AS weight, 0.0 AS mu
@@ -1713,12 +1549,7 @@ object TierC {
     Q("c40_quality_classifier_apply",
       (s, d) => {
         val docs = Tables.documents(s, d)
-        // scores with the TRAINED ARTIFACT (train-once cache shared with
-        // c39) — the real apply step reads a persisted model, it never
-        // retrains per downstream query
-        val m = graft.ext.Classifier.trainLogRegCached(d, docs, col("doc_id"), col("text"),
-          size(array_distinct(TextAnalysis.tokens(col("text")))) >= 26, dim = 64, iters = 5)
-          .map(t => t._1 -> (t._2, t._3)).toMap
+        val m = Fixtures.qualityModel(s, d).map(t => t._1 -> (t._2, t._3)).toMap
         graft.ext.Classifier.scoreLogReg(docs, col("doc_id"), col("text"),
           Array.tabulate(64)(j => m(j.toLong)._1), Array.tabulate(64)(j => m(j.toLong)._2),
           m(-1L)._1, threshold = 0.5)
@@ -2726,7 +2557,7 @@ object TierC {
     // merges. hex() is uppercase on both engines, so the pair/rank
     // tables agree byte-for-byte.
     Q("c134_bpe_train_byte_level",
-      (s, d) => bpeByteMerges6(s, d).orderBy("rank"),
+      (s, d) => Fixtures.bpeByteMerges6(s, d).orderBy("rank"),
       Some {
         val n = 6
         val iters = (1 to n).map { i =>
@@ -2770,7 +2601,7 @@ object TierC {
     // the row.
     Q("c135_bpe_byte_encode",
       (s, d) => {
-        val merges = bpeByteMerges6(s, d).orderBy("rank")
+        val merges = Fixtures.bpeByteMerges6(s, d).orderBy("rank")
           .collect().map(_.getString(1)).toSeq
         TextAnalysis.bpeEncodeByteLevel(Tables.documents(s, d),
           col("doc_id"), col("text"), merges).orderBy("doc_id")
@@ -3092,7 +2923,7 @@ object TierC {
     // pipeline runs before committing to a dedup threshold. Whole c02
     // pipeline at threshold 0 + one bounded histogram agg.
     Q("c72_lsh_threshold_sweep",
-      (s, d) => Dedup.thresholdHistogram(lshPairsAll(s, d)).orderBy("bin"),
+      (s, d) => Dedup.thresholdHistogram(Fixtures.lshPairsAll(s, d)).orderBy("bin"),
       Some(
         s"""WITH $toksCte,
            |$gramsCte,
@@ -3185,7 +3016,7 @@ object TierC {
     // integer luminance/mean/threshold math, so the 64-bit hash is
     // engine-exact; the oracle replays the pattern analytically.
     Q("c77_image_ahash",
-      (s, d) => imageHashFixture(s, d).orderBy("doc_id"),
+      (s, d) => Fixtures.imageHash(s, d).orderBy("doc_id"),
       Some("""WITH dims AS (
              |  SELECT doc_id,
              |         CAST(doc_id % 9 + 2 AS INT) AS width,
@@ -3248,7 +3079,7 @@ object TierC {
     // SimHash text path. Oracle computes the full pairwise ground truth,
     // which the banding must reproduce exactly.
     Q("c78_image_neardup",
-      (s, d) => Dedup.hammingPairs64(imageHashFixture(s, d),
+      (s, d) => Dedup.hammingPairs64(Fixtures.imageHash(s, d),
           hashCol = "ahash", maxDist = 3)
         .orderBy("doc_a", "doc_b"),
       Some("""WITH dims AS (
@@ -3284,7 +3115,7 @@ object TierC {
     // pairwise recompute of each incoming image's standing neighbors.
     Q("c79_image_neardup_incremental",
       (s, d) => {
-        val sig = imageHashFixture(s, d)
+        val sig = Fixtures.imageHash(s, d)
         Dedup.hammingIncremental64(
           sig.filter(col("doc_id") % 10 =!= 0),
           sig.filter(col("doc_id") % 10 === 0),
@@ -3338,7 +3169,7 @@ object TierC {
         // (cell assignment, codebook, ADC math), not data geometry.
         // Fixture (corpus+twins, codebooks, query vectors) is memoized —
         // shared with the c120 re-rank gate.
-        val (e, coarse, cb, qvs) = annFixture(s, d)
+        val (e, coarse, cb, qvs) = Fixtures.annTwins(s, d)
         val qids = annQids
         val w = Window.partitionBy("query_id")
           .orderBy(col("adist"), col("vec_id")) // ≤11 rows per query
@@ -3373,7 +3204,7 @@ object TierC {
     Q("c120_ann_rerank_gate",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val (e, coarse, cb, qvs) = annFixture(s, d)
+        val (e, coarse, cb, qvs) = Fixtures.annTwins(s, d)
         val qids = annQids
         val w = Window.partitionBy("query_id")
           .orderBy(col("dist"), col("vec_id")) // ≤11 rows per query
@@ -3839,7 +3670,7 @@ object TierC {
       (s, d) => {
         val e = Tables.embeddings(s, d)
         Similarity.silhouette(e, col("vec_id"), col("embedding"),
-          kmeansFit8(s, d).select(col("cluster"), col("centroid")))
+          Fixtures.kmeansFit8(s, d).select(col("cluster"), col("centroid")))
       },
       Some(
         s"""WITH ${kmeansSqlCtes(8)},
@@ -4868,7 +4699,7 @@ object TierC {
     Q("c125_audio_neardup",
       (s, d) => {
         implicit val sp: SparkSession = s
-        val h = audioHashFixture(s, d)
+        val h = Fixtures.audioHash(s, d)
         Dedup.hammingPairs64(h.select(col("doc_id"), col("ehash")), "ehash", maxDist = 3)
           .join(h.select(col("doc_id").as("doc_a"), col("n_frames").as("nf")), "doc_a")
           .join(h.select(col("doc_id").as("doc_b"), col("n_frames").as("nf_b")), "doc_b")
