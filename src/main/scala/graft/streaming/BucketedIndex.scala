@@ -160,10 +160,15 @@ object BucketedIndex {
     * records (header `appliedBatch`) — pass it when the index id differs
     * from the stream batch id (the even/odd auto-compaction scheme);
     * defaults to `batchId` itself. `scheme` (when non-empty) is pinned
-    * into the header at every publish so lineage rules are enforceable. */
+    * into the header at every publish so lineage rules are enforceable.
+    * `beforePublish` runs on the calling thread after the bucket write and
+    * right before the manifest swap; a throw from it aborts the publish
+    * (the written batch dir is garbage a retry overwrites). It is not
+    * called when the batch is skipped as applied or touches no bucket. */
   def applyBatch(spark: SparkSession, dir: String, batch: DataFrame,
                  batchId: Long, nBuckets: Int = 256,
-                 streamBatchId: Long = -1L, scheme: String = ""): Seq[Int] = {
+                 streamBatchId: Long = -1L, scheme: String = "",
+                 beforePublish: () => Unit = () => ()): Seq[Int] = {
     val mark = if (streamBatchId >= 0) streamBatchId else batchId
     // Retry safety: a crash after publish but before the checkpoint commit
     // redelivers the batch. The authoritative guard is the header's
@@ -210,6 +215,7 @@ object BucketedIndex {
       val newManifest = (manifest -- touched) ++ touched.filter(live).map(_ -> batchId)
       val header = Map("appliedBatch" -> mark.toString) ++
         (if (scheme.nonEmpty) Map("scheme" -> scheme) else Map.empty)
+      beforePublish()
       writeManifest(dir, newManifest, batchId, header)
       fp("apply.published")
       touched

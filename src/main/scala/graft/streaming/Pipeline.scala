@@ -1,6 +1,9 @@
 package graft.streaming
 
 import graft.ChangeLog
+import java.io.InterruptedIOException
+import java.util.UUID
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -78,21 +81,25 @@ object Pipeline {
   /** One COMPOSED incremental micro-batch — quarantine + sketch tables +
     * bucketed index + scheduled vacuum, the full 100 TB-operator shape in
     * one body. Public so the streaming shell, batch replays, and the
-    * benchmark harness all drive the exact code. Ordering is
-    * load-bearing: sketches BEFORE the index, so the only torn-publish
-    * state a crash can leave is "sketches ahead", which replay converges
-    * (both publishes are individually idempotent on batchId —
-    * StreamingSpec's crash-window case). */
+    * benchmark harness all drive the exact code.
+    *
+    * With a quarantine or sketch dir the batch is persisted once and every
+    * branch derives its rows from that copy (one source scan per batch, not
+    * one per step). The quarantine write and the sketch update (each when
+    * its dir is set) run on their own threads, overlapped with the index
+    * fold and bucket write on the calling thread; with neither dir set the
+    * index is the only reader: no cache and no thread.
+    * Publishes stay ordered by a barrier: the index waits for both side
+    * branches right before its manifest swap and aborts on their failure,
+    * so "index published" implies "sketches and quarantine published". The
+    * only torn-publish state a crash can leave is "side tables ahead",
+    * which replay converges (every publish is idempotent on batchId —
+    * StreamingSpec's crash-window cases). Every branch is joined before
+    * this returns or throws, so no straggling writer races a redelivered
+    * batch; a `StreamingQuery.stop()` that interrupts the stream thread
+    * cancels the side branches' jobs. */
   def applyIncrementalBatch(spark: SparkSession, cfg: Config, batch: DataFrame,
                             batchId: Long, nBuckets: Int = 256): Unit = {
-    val bad = batch.filter(isMalformed)
-    cfg.quarantineDir.foreach { qd =>
-      bad.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite").parquet(s"$qd/b$batchId")
-    }
-    // sketches before the index (see above): idempotent pair
-    cfg.sketchDir.foreach(sd => SketchTable.updateForBatch(
-      spark, sd, batch.filter(!isMalformed), batchId))
     // Auto-compaction needs a compaction id FRESH against every batch id
     // (BucketedIndex.compact's lineage rule) without colliding with the
     // NEXT stream batch — a collision would trip applyBatch's retry-skip
@@ -100,9 +107,10 @@ object Pipeline {
     // index therefore maps stream batch N to even id 2N and compactions
     // to odd 2N+1 (both monotone, disjoint). The mapping is a property of
     // the index LINEAGE, pinned into the manifest header at first publish
-    // and enforced here: flipping compactAfterDirs across 0 on a live
-    // index would re-use ids from the other scheme (e.g. indexId 2N
-    // colliding with an old plain batch dir) and silently skip batches.
+    // and enforced here, before any branch writes: flipping
+    // compactAfterDirs across 0 on a live index would re-use ids from the
+    // other scheme (e.g. indexId 2N colliding with an old plain batch dir)
+    // and silently skip batches.
     val scheme = if (cfg.compactAfterDirs > 0) "evenOdd" else "plain"
     val header = BucketedIndex.readHeader(cfg.indexDir)
     header.get("scheme") match {
@@ -117,9 +125,27 @@ object Pipeline {
           "plain batch id and silently skip a batch; start a fresh index dir")
     }
     val indexId = if (cfg.compactAfterDirs > 0) 2 * batchId else batchId
-    BucketedIndex.applyBatch(spark, cfg.indexDir,
-      batch.filter(!isMalformed), indexId, nBuckets,
-      streamBatchId = batchId, scheme = scheme)
+    // each branch reads the batch: cache it when there is more than one
+    // (with the index alone, caching costs more than the one scan it saves)
+    val shared = cfg.quarantineDir.isDefined || cfg.sketchDir.isDefined
+    val once = if (shared) batch.persist() else batch
+    try {
+      val good = once.filter(!isMalformed)
+      val side = new SideBranches(spark.sparkContext, batchId,
+        cfg.quarantineDir.map(qd => () =>
+          once.filter(isMalformed).withColumn("batch_id", lit(batchId))
+            .write.mode("overwrite").parquet(s"$qd/b$batchId")).toSeq ++
+          cfg.sketchDir.map(sd => () =>
+            SketchTable.updateForBatch(spark, sd, good, batchId)))
+      try {
+        BucketedIndex.applyBatch(spark, cfg.indexDir, good, indexId, nBuckets,
+          streamBatchId = batchId, scheme = scheme, beforePublish = () => side.await())
+        side.await() // a skipped or empty batch never reached the barrier
+      } catch { case t: Throwable =>
+        side.join(cancel = isInterrupt(t)).filter(_ ne t).foreach(t.addSuppressed)
+        throw t
+      }
+    } finally if (shared) once.unpersist()
     // fan-out policy: when the manifest references more than
     // compactAfterDirs distinct batch dirs (each cold bucket pinned to
     // the batch that last touched it), fold the whole index into one
@@ -141,6 +167,60 @@ object Pipeline {
       cfg.sketchDir.foreach(SketchTable.vacuum)
     }
   }
+
+  /** The side branches of one micro-batch, each started at once on its own
+    * thread. The threads are made per batch by the caller (the stream
+    * thread), never taken from a shared pool, so they inherit its
+    * SparkContext local properties: the job tags and the SQL root execution
+    * id. Their jobs run in a job group of their own, so a stop can cancel
+    * both the jobs running and any a branch would start after. */
+  private[graft] final class SideBranches(sc: SparkContext, batchId: Long,
+                                          bodies: Seq[() => Unit]) {
+    private val group = s"graft-batch-$batchId-side-${UUID.randomUUID()}"
+    private val failures = new Array[Throwable](bodies.size)
+    private val threads = bodies.zipWithIndex.map { case (body, i) =>
+      val t = new Thread(() =>
+        try {
+          sc.setJobGroup(group, s"batch $batchId side branch $i", interruptOnCancel = true)
+          body()
+        } catch { case e: Throwable => failures(i) = e },
+        s"graft-batch-$batchId-side-$i")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+
+    /** Wait for every branch and return their failures in start order.
+      * `StreamingQuery.stop()` cancels the query's running jobs, then
+      * interrupts the stream thread. An interrupt of the caller during the
+      * wait, or `cancel` (the caller already failed with one), cancels the
+      * branches' group, running and future jobs alike, so each branch fails
+      * at its next job instead of running to its end. The wait goes on
+      * until all have ended; an interrupt caught here is re-asserted after. */
+    def join(cancel: Boolean = false): Seq[Throwable] = {
+      var interrupted = false
+      if (cancel) sc.cancelJobGroupAndFutureJobs(group)
+      threads.foreach { t =>
+        while (t.isAlive) try t.join() catch { case _: InterruptedException =>
+          if (!interrupted && !cancel) sc.cancelJobGroupAndFutureJobs(group)
+          interrupted = true
+        }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      failures.toSeq.filter(_ != null)
+    }
+
+    /** The publish barrier: wait for every branch, rethrow the first failure. */
+    def await(): Unit = join().headOption.foreach(e => throw e)
+  }
+
+  /** Whether a failure is an interrupt (a stop), possibly wrapped. */
+  private def isInterrupt(t: Throwable): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
+      .exists {
+        case _: InterruptedException | _: InterruptedIOException => true
+        case _ => false
+      }
 
   /** A1/A2 + A9/A10: the streaming shell. Per-batch cost
     * O(batch + touched buckets) via [[BucketedIndex]]. */

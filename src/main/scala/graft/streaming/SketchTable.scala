@@ -27,10 +27,11 @@ import scala.jdk.CollectionConverters._
   *
   * Exactly-once under retries: versioned dirs `v<batchId>` + an atomic
   * `_CURRENT` pointer, skip when the pointer already names this batch id
-  * (this table's own publish, [[updateForBatch]]). Callers update sketches
-  * BEFORE publishing the index so "index published" implies "sketches
-  * published" and a crash between the two publishes replays cleanly
-  * (sketch side skips, index side applies).
+  * (this table's own publish, [[updateForBatch]]). `Pipeline` runs the
+  * sketch update beside the index fold and the index's manifest swap waits
+  * for it (a barrier), so "index published" implies "sketches published"
+  * and a crash between the two publishes replays cleanly (sketch side
+  * skips, index side applies).
   *
   * Reference scope: the reference's observer keeps no observability
   * state at all (`observer6/ElasticSearchBulkOperator.java` counts only

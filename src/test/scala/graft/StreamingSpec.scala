@@ -1,10 +1,12 @@
 package graft
 
 import graft.streaming.{BucketedIndex, Pipeline, SketchTable}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 /** §5.4 streaming equivalence: the real foreachBatch pipeline over varying
@@ -13,6 +15,40 @@ import scala.jdk.CollectionConverters._
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
   private def tmpDir(prefix: String) = Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs still running. The status store follows the asynchronous
+    * listener bus, so drain it first (`listenerBus` is private[spark],
+    * public in bytecode). */
+  private def activeJobIds(): Seq[Int] = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    sc.statusTracker.getActiveJobIds().toSeq
+  }
+
+  /** Whether every job has ended within 10 s. A cancelled job's waiter is
+    * released before its end event is posted, so a cancel is seen a moment
+    * after the thread that ran the job has returned. */
+  private def awaitNoActiveJobs(): Boolean = {
+    val deadline = System.nanoTime() + 10e9
+    while (activeJobIds().nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    activeJobIds().isEmpty
+  }
+
+  /** Assert the sketch tables under `sketchDir` equal the one-shot sketches
+    * of `good`: HDR rows exactly, HLL per-day distinct-key estimates.
+    * Returns the estimates. */
+  private def assertSketchesMatchOneShot(sketchDir: String, good: DataFrame): Map[String, Long] = {
+    val (bHdr, bHll) = SketchTable.oneShot(good)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(SketchTable.readHdr(spark, sketchDir)) == rows(bHdr))
+    val est = SketchTable.distinctKeysByDay(spark, sketchDir).collect()
+      .map(r => r.get(0).toString -> r.getLong(1)).toMap
+    val expEst = bHll.select(col("day"), hll_sketch_estimate(col("sk")))
+      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
+    assert(est == expEst)
+    est
+  }
 
   test("MemoryStream pipeline == batch fold, including quarantine") {
     val sp = spark
@@ -365,14 +401,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       batchId = BucketedIndex.readHeader(cfg.indexDir)("appliedBatch").toLong, nBuckets = 4)
     assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) ==
       indexMap(Merge.fold(mutDf(part1 ++ part2))))
-    val (bHdr, bHll) = SketchTable.oneShot(mutDf(part1 ++ part2))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    assert(rows(SketchTable.readHdr(sp, sketchDir)) == rows(bHdr))
-    val est = SketchTable.distinctKeysByDay(sp, sketchDir).collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val expEst = bHll.select(col("day"), hll_sketch_estimate(col("sk")))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    assert(est == expEst)
+    val est = assertSketchesMatchOneShot(sketchDir, mutDf(part1 ++ part2))
     assert(est == Map("2024-01-01" -> 1L, "2024-01-02" -> 2L, "2024-01-03" -> 1L))
   }
 
@@ -408,14 +437,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(indexMap(BucketedIndex.read(spark, cfg.indexDir)) ==
       indexMap(Merge.fold(mutDf(b0 ++ b1))))
     // sketches == one-shot over the whole log (no double-counted batch 1)
-    val (bHdr, bHll) = SketchTable.oneShot(mutDf(b0 ++ b1))
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    assert(rows(SketchTable.readHdr(spark, sketchDir)) == rows(bHdr))
-    val est = SketchTable.distinctKeysByDay(spark, sketchDir).collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val expEst = bHll.select(col("day"), hll_sketch_estimate(col("sk")))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    assert(est == expEst)
+    assertSketchesMatchOneShot(sketchDir, mutDf(b0 ++ b1))
     // the OTHER torn shape never exists by ordering: index at v<id> with
     // sketches behind would double-apply sketches on replay — assert the
     // invariant applyIncrementalBatch maintains (sketch version >= the
@@ -423,6 +445,121 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val sv = SketchTable.currentVersion(sketchDir).get.stripPrefix("v").toLong
     val iv = appliedBatch().get.toLong
     assert(sv >= iv)
+  }
+
+  test("overlapped branches: a failed side branch blocks the index swap; an index fault joins them") {
+    // applyIncrementalBatch runs the quarantine write and the sketch update
+    // beside the index fold; the index waits for both right before its
+    // manifest swap. A failed side branch must abort that swap, and a
+    // failed index must still wait for the side branches before throwing
+    // (no straggling writer may race the redelivered batch).
+    val cfg = Pipeline.Config(changeLogDir = "unused", indexDir = tmpDir("graft-side-idx"),
+      checkpointDir = "unused", quarantineDir = Some(tmpDir("graft-side-q")),
+      sketchDir = Some(tmpDir("graft-side-sk")))
+    val sketchDir = cfg.sketchDir.get
+    def appliedBatch() = BucketedIndex.readHeader(cfg.indexDir).get("appliedBatch")
+    def index() = indexMap(BucketedIndex.read(spark, cfg.indexDir))
+    val b0 = Seq(
+      mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "one")),
+      mut("b", "U", "2024-01-02 00:00:01", 2, ("f", "y", "two")))
+    val b1 = Seq(
+      mut("a", "U", "2024-01-02 00:00:02", 3, ("f", "x", "three")),
+      mut("c", "U", "2024-01-03 00:00:03", 4, ("f", "z", "four")),
+      mut("b", "D", "2024-01-03 00:00:04", 5),
+      mut(null, "U", "2024-01-03 00:00:05", 6, ("f", "bad", "x")))
+    val b2 = Seq(
+      mut("d", "U", "2024-01-04 00:00:00", 7, ("f", "w", "five")),
+      mut("a", "D", "2024-01-04 00:00:01", 8))
+    Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b0), 0, nBuckets = 4)
+    val index0 = index()
+
+    // ---- sketch branch fails: its version dir is a regular file ----
+    val blocker = java.nio.file.Paths.get(sketchDir, "v1")
+    Files.createFile(blocker)
+    intercept[Exception](Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b1), 1, nBuckets = 4))
+    assert(appliedBatch().contains("0"), "a failed sketch branch must abort the index swap")
+    assert(index() == index0)
+    assert(SketchTable.currentVersion(sketchDir).contains("v0"))
+    Files.delete(blocker)
+    Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b1), 1, nBuckets = 4)
+    assert(appliedBatch().contains("1"))
+    assert(index() == indexMap(Merge.fold(mutDf(b0 ++ b1).filter(!Pipeline.isMalformed))))
+
+    // ---- index branch faults before its bucket write ----
+    BucketedIndex.faultHook = p =>
+      if (p == "apply.beforeBucketWrite") throw new IllegalStateException(s"injected crash at $p")
+    try intercept[IllegalStateException](
+      Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b2), 2, nBuckets = 4))
+    finally BucketedIndex.faultHook = null
+    assert(activeJobIds().isEmpty, "a side branch outlived the call")
+    assert(SketchTable.currentVersion(sketchDir).contains("v2"))
+    assert(appliedBatch().contains("1"))
+    // replay: the sketch side skips (already published), the index applies
+    Pipeline.applyIncrementalBatch(spark, cfg, mutDf(b2), 2, nBuckets = 4)
+    assert(appliedBatch().contains("2"))
+    val good = mutDf(b0 ++ b1 ++ b2).filter(!Pipeline.isMalformed)
+    assert(index() == indexMap(Merge.fold(good)))
+    assertSketchesMatchOneShot(sketchDir, good)
+    assert(spark.read.parquet(s"${cfg.quarantineDir.get}/*").count() == 1)
+  }
+
+  test("SideBranches: an interrupted join cancels the branches' jobs, joins all, re-asserts the interrupt") {
+    // StreamingQuery.stop() cancels the jobs running at that moment, then
+    // interrupts the stream thread; a side branch must not run its current
+    // job to the end, nor start (and publish) its next one, while the
+    // stream thread waits for it
+    val started = new CountDownLatch(2)
+    def slowJob(): Unit = spark.sparkContext.parallelize(Seq(1), 1).foreach(_ => Thread.sleep(120000))
+    val side = new Pipeline.SideBranches(spark.sparkContext, 0L, Seq.fill(2)(() => {
+      started.countDown()
+      try slowJob() catch { case _: Exception => () }
+      slowJob()
+    }))
+    assert(started.await(30, TimeUnit.SECONDS))
+    val t0 = System.nanoTime()
+    Thread.currentThread().interrupt() // what stop() does to the stream thread
+    val failures = side.join()
+    assert(Thread.interrupted(), "the caller's interrupt must be re-asserted")
+    assert((System.nanoTime() - t0) / 1e9 < 30, "join waited out a branch's jobs")
+    assert(failures.size == 2)
+    assert(awaitNoActiveJobs())
+  }
+
+  test("stop() during a batch: side branches are joined before the stream ends; restart converges") {
+    val sp = spark
+    val cfg = Pipeline.Config(changeLogDir = tmpDir("graft-stop-changes"),
+      indexDir = tmpDir("graft-stop-idx"), checkpointDir = tmpDir("graft-stop-ckpt"),
+      triggerSeconds = 1, quarantineDir = Some(tmpDir("graft-stop-q")),
+      sketchDir = Some(tmpDir("graft-stop-sk")))
+    val log = Seq(
+      mut("a", "U", "2024-01-01 00:00:00", 1, ("f", "x", "one")),
+      mut("b", "U", "2024-01-02 00:00:01", 2, ("f", "y", "two")),
+      mut("a", "D", "2024-01-02 00:00:02", 3),
+      mut(null, "U", "2024-01-03 00:00:03", 4, ("f", "bad", "x")))
+    mutDf(log).write.mode("append").parquet(cfg.changeLogDir)
+    // hold the stream thread inside the index branch until stop() interrupts it
+    val inBatch = new CountDownLatch(1)
+    BucketedIndex.faultHook = p =>
+      if (p == "apply.beforeBucketWrite") { inBatch.countDown(); Thread.sleep(120000) }
+    val stopS = try {
+      val q1 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
+      assert(inBatch.await(60, TimeUnit.SECONDS), "batch 0 never reached the index write")
+      val t0 = System.nanoTime()
+      q1.stop()
+      (System.nanoTime() - t0) / 1e9
+    } finally BucketedIndex.faultHook = null
+    assert(stopS < 60, s"stop() took $stopS s")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(_.getName.startsWith("graft-batch-")),
+      "a side branch outlived the stream thread")
+    assert(awaitNoActiveJobs())
+    assert(BucketedIndex.readHeader(cfg.indexDir).get("appliedBatch").isEmpty)
+    // restart: the checkpoint redelivers batch 0 and every table converges
+    val q2 = Pipeline.startIncremental(sp, cfg, nBuckets = 4)
+    q2.processAllAvailable(); q2.stop()
+    val good = mutDf(log).filter(!Pipeline.isMalformed)
+    assert(indexMap(BucketedIndex.read(sp, cfg.indexDir)) == indexMap(Merge.fold(good)))
+    assertSketchesMatchOneShot(cfg.sketchDir.get, good)
+    assert(sp.read.parquet(s"${cfg.quarantineDir.get}/*").count() == 1)
   }
 
   test("JSON and CSV change-log sources fold identically to parquet") {
@@ -523,6 +660,10 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     q1.processAllAvailable()
     mutDf(log.drop(4)).write.mode("append").parquet(changeDir)
     q1.processAllAvailable(); q1.stop()
+    // the batch is persisted once and every branch reads that copy, so the
+    // source reports each committed row once (an uncached batch is
+    // re-scanned by each step: quarantine, sketches, index fold)
+    assert(q1.recentProgress.map(_.numInputRows).sum == log.size)
     val body =
       """{"query": {"bool": {
         |  "must": [{"term": {"info.etype": "purchase"}}],
@@ -540,14 +681,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val quarantined = sp.read.parquet(s"${cfg.quarantineDir.get}/*").count()
     assert(quarantined == 2)
     // sketch tables equal the one-shot sketches of the good log
-    val (bHdr, bHll) = SketchTable.oneShot(good)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    assert(rows(SketchTable.readHdr(sp, cfg.sketchDir.get)) == rows(bHdr))
-    val est = SketchTable.distinctKeysByDay(sp, cfg.sketchDir.get).collect()
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    val expEst = bHll.select(col("day"), hll_sketch_estimate(col("sk")))
-      .collect().map(r => r.get(0).toString -> r.getLong(1)).toMap
-    assert(est == expEst)
+    assertSketchesMatchOneShot(cfg.sketchDir.get, good)
   }
 
   test("streaming Bloom decontamination == batch, across batch splits") {
