@@ -45,11 +45,6 @@ object ChangeLog {
   def readJson(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Model.mutationSchema).option("mode", "PERMISSIVE").json(path)
 
-  def readStreamJson(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 16): DataFrame =
-    spark.readStream.schema(Model.mutationSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .option("mode", "PERMISSIVE").json(dir)
-
   /** CSV change-log: flat columns + JSON-encoded cells column. */
   def readCsv(spark: SparkSession, path: String): DataFrame =
     spark.read

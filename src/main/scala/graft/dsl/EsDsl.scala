@@ -627,17 +627,6 @@ object EsDsl {
       round(max(value), 4).as("max_v"),
       round(sum(value), 4).as("sum_v"),
       round(avg(value), 6).as("avg_v"))
-  /** B10+ `extended_stats`: [[statsAgg]] plus POPULATION variance /
-    * std-dev (6 dp) — the moments ES 6.5 reports. */
-  def extendedStatsAgg(df: DataFrame, groups: Seq[Column], value: Column): DataFrame =
-    df.groupBy(groups: _*).agg(
-      count(value).as("value_count"),
-      round(min(value), 4).as("min_v"),
-      round(max(value), 4).as("max_v"),
-      round(sum(value), 4).as("sum_v"),
-      round(avg(value), 6).as("avg_v"),
-      round(var_pop(value), 6).as("variance_v"),
-      round(stddev_pop(value), 6).as("stddev_v"))
 
   /** B11 `cardinality` — HLL++ like ES; `rsd` mirrors the precision knob. */
   def cardinality(c: Column, rsd: Double = 0.05): Column = approx_count_distinct(c, rsd)

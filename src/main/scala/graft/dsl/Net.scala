@@ -37,14 +37,6 @@ object Net {
   def withDerivedIp(df: DataFrame, key: Column, name: String): DataFrame =
     df.withColumn(name, derivedIp(key))
 
-  /** DuckDB twin of [[derivedIp]] (oracle builders). */
-  def sqlDerivedIp(key: String): String = {
-    val v = s"(${Hashing.sqlMd5Long60(s"'ip:' || CAST($key AS VARCHAR)")} % 4294967296)"
-    s"(CAST($v // 16777216 % 256 AS VARCHAR) || '.' || " +
-      s"CAST($v // 65536 % 256 AS VARCHAR) || '.' || " +
-      s"CAST($v // 256 % 256 AS VARCHAR) || '.' || CAST($v % 256 AS VARCHAR))"
-  }
-
   /** Dotted-quad string column → numeric value (0 .. 2³²−1). */
   def aton(ip: Column): Column = {
     val p = split(ip, "\\.")
@@ -53,13 +45,6 @@ object Net {
       element_at(p, 3).cast("long") * 256L +
       element_at(p, 4).cast("long")
   }
-
-  /** DuckDB twin of [[aton]]. */
-  def sqlAton(ip: String): String =
-    s"(CAST(string_split($ip, '.')[1] AS BIGINT) * 16777216 + " +
-      s"CAST(string_split($ip, '.')[2] AS BIGINT) * 65536 + " +
-      s"CAST(string_split($ip, '.')[3] AS BIGINT) * 256 + " +
-      s"CAST(string_split($ip, '.')[4] AS BIGINT))"
 
   /** Driver-side dotted-quad → Long (range-bound construction). */
   def ipToLong(ip: String): Long =

@@ -302,23 +302,13 @@ object Dedup {
       .orderBy(desc("n_shared"), col("doc_a"), col("doc_b"))
   }
 
-  /** LSH threshold-calibration sweep — the "which Jaccard cutoff do we
-    * commit to" diagnostic run BEFORE a full dedup: exact-verified Jaccard
-    * of every LSH candidate pair, binned into `nBins` uniform bins, with
-    * the at-or-above cumulative count (= pairs a given threshold would
-    * remove). Reuses the whole [[minhashLsh]] pipeline at threshold 0;
-    * the histogram adds one bounded hash agg and one ≤ nBins-row window —
-    * nothing new touches the corpus. */
-  def lshThresholdSweep(df: DataFrame, idCol: Column, text: Column,
-                        numHashes: Int = 16, bandSize: Int = 2,
-                        shingleN: Int = 3, nBins: Int = 10): DataFrame =
-    thresholdHistogram(minhashLsh(df, idCol, text, numHashes, bandSize,
-      threshold = 0.0, shingleN = shingleN), nBins)
-
-  /** The binning half of [[lshThresholdSweep]], exposed separately so a
-    * caller holding an already-materialized all-candidates pair table
-    * (e.g. the corpus-shared threshold-0 LSH cache) pays only the
-    * bounded histogram. */
+  /** LSH threshold-calibration histogram — the "which Jaccard cutoff do
+    * we commit to" diagnostic run BEFORE a full dedup: the exact-verified
+    * Jaccard of every candidate pair of a threshold-0 [[minhashLsh]] run
+    * (e.g. the corpus-shared threshold-0 LSH cache), binned into `nBins`
+    * uniform bins, with the at-or-above cumulative count (= pairs a given
+    * threshold would remove). One bounded hash agg and one ≤ nBins-row
+    * window — nothing touches the corpus. */
   def thresholdHistogram(pairs: DataFrame, nBins: Int = 10): DataFrame = {
     val binned = pairs
       .withColumn("bin", least(floor(col("jac") * nBins), lit(nBins.toLong - 1)).cast("int"))

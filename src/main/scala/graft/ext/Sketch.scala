@@ -83,16 +83,13 @@ object Sketch {
     docs.select(explode(TextAnalysis.tokens(text)).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("cnt"))
 
-  /** Count-Min sketch of the corpus token counts: d rows × w cells. The
-    * corpus is touched ONCE (the vocab agg); only the vocab table — not
-    * the token stream — expands d ways into cells, so the Expand is
-    * vocab-sized. Cell mass = Σ counts of tokens hashing there. */
-  def cmsSketch(docs: DataFrame, text: Column, d: Int = 4, w: Int = 1024): DataFrame =
-    cmsFromCounts(tokenCounts(docs, text), d, w)
-
   private def cmsCell(r: Int, tok: Column, w: Int): Column =
     pmod(Hashing.md5Long60(concat(lit(s"cms$r:"), tok)), lit(w.toLong))
 
+  /** Count-Min sketch of the token counts: d rows × w cells. Only the
+    * vocab table — not the token stream — expands d ways into cells, so
+    * the Expand is vocab-sized. Cell mass = Σ counts of tokens hashing
+    * there. */
   private def cmsFromCounts(counts: DataFrame, d: Int, w: Int): DataFrame =
     counts.select(explode(array((0 until d).map(r =>
         struct(lit(r).as("r"), cmsCell(r, col("tok"), w).as("cell"))): _*)).as("rc"),

@@ -290,18 +290,9 @@ object TextAnalysis {
   }
 
   /** Adjacent-pair counts over a marker-form word-frequency frame — the
-    * argmax candidate table both merge trainers score. */
-  private def mergePairCounts(wf: DataFrame): DataFrame = wf
-    .select(col("freq"), expr("regexp_extract_all(w, '<([^<>]*)>', 1)").as("s"))
-    .filter(size(col("s")) >= 2)
-    .select(col("freq"), explode(expr(
-      """transform(sequence(1, size(s) - 1),
-        |  i -> concat(element_at(s, i), ' ', element_at(s, i + 1)))""".stripMargin))
-      .as("pair"))
-    .groupBy("pair").agg(sum(col("freq")).as("pf"))
-
-  /** [[mergePairCounts]] plus the corpus symbol count riding the SAME
-    * aggregation (r18): one extra NULL-pair row per word carries
+    * argmax candidate table both merge trainers score — plus the corpus
+    * symbol count riding the SAME aggregation (r18): one extra NULL-pair
+    * row per word carries
     * freq·|symbols|, so the null key's sum equals the marker-count
     * totExpr exactly (both count every symbol occurrence once, integer
     * arithmetic) and the round's argmax collect returns it for free —

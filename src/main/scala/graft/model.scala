@@ -33,9 +33,6 @@ case class Mutation(
     seq: Long,
     cells: Seq[Cell])
 
-/** One materialized index document (the "ES doc"). */
-case class IndexedDoc(id: String, info: Map[String, String])
-
 object Model {
   val cellType: StructType = StructType(Seq(
     StructField("family", StringType),

@@ -3,7 +3,6 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** C6 — multimodal columns: image/audio/video payloads as opaque `binary`
   * columns with typed metadata, flowing through every relational operator.
@@ -19,10 +18,6 @@ import org.apache.spark.sql.types._
 object Multimodal {
 
   case class MediaMeta(doc_id: Long, width: Int, height: Int, n_bytes: Int, fmt: String)
-
-  val payloadSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true)))
 
   /** Attach a synthetic binary payload derived from the text column — the
     * test corpus has no real media, so the payload is the md5 digest bytes

@@ -20,17 +20,18 @@ import scala.jdk.CollectionConverters._
   * ONLY those buckets' current versions, merges, writes ONLY those buckets
   * under the new batch id, and atomically swaps the manifest. Untouched
   * buckets are neither read nor written — per-batch cost is
-  * O(|batch| + |touched buckets|), not O(|index|).
+  * O(|batch| + |touched buckets|), not O(|index|), except for the batch
+  * the fan-out policy makes rewrite every bucket ([[applyBatch]]).
   *
   * Exactly-once under retries: the manifest swap is a single atomic file
   * move. A crash BEFORE the swap leaves the manifest on the old versions
   * and the retry rewrites b<batchId> from scratch (reads come only from
   * older batch dirs — never an ancestor of the overwrite target). A crash
-  * AFTER the swap is detected by the manifest already referencing the
-  * batch id, and the retry is a no-op skip — re-merging would overwrite
-  * the very dirs it reads. Consequence: an index dir belongs to ONE
-  * checkpoint lineage (batch ids must not restart against an existing
-  * index — use a fresh index dir with a fresh checkpoint).
+  * AFTER the swap is detected by the manifest header's `appliedBatch`,
+  * and the retry is a no-op skip — re-merging would overwrite the very
+  * dirs it reads. Consequence: an index dir belongs to ONE checkpoint
+  * lineage (batch ids must not restart against an existing index — use a
+  * fresh index dir with a fresh checkpoint).
   * Superseded bucket dirs are garbage, removed by [[vacuum]].
   */
 object BucketedIndex {
@@ -55,11 +56,9 @@ object BucketedIndex {
   }
 
   /** Header metadata lines (`#key=value`) of the current manifest. Carries
-    * `appliedBatch` — the last applied STREAM batch id, the retry-skip
-    * guard's source of truth (dir-id membership alone is defeated by
-    * same-trigger auto-compaction repointing the manifest at the compact
-    * dir) — and `scheme`, the batch-id→index-id mapping pinned at index
-    * birth. Empty for pre-header index dirs. */
+    * `appliedBatch`, the last applied STREAM batch id: the retry-skip
+    * guard's source of truth (see [[applyBatch]]). Empty for pre-header
+    * index dirs. */
   def readHeader(dir: String): Map[String, String] = {
     val p = Paths.get(dir, "_MANIFEST")
     if (!Files.exists(p)) Map.empty
@@ -77,9 +76,10 @@ object BucketedIndex {
     }.toMap
 
   /** Ordered ids of the retained manifest versions (the version log under
-    * `dir/manifests/`). Each successful publish — applyBatch or compact —
-    * appends one entry; [[vacuum]]'s grace window is expressed over this
-    * log (keep the newest N). Empty for pre-log index dirs. */
+    * `dir/manifests/`). Each successful publish — applyBatch (compacting
+    * or not) or compact — appends one entry; [[vacuum]]'s grace window is
+    * expressed over this log (keep the newest N). Empty for pre-log index
+    * dirs. */
   def manifestVersions(dir: String): Seq[Long] = {
     val mdir = Paths.get(dir, "manifests")
     if (!Files.exists(mdir)) Seq.empty
@@ -156,11 +156,18 @@ object BucketedIndex {
 
   /** Apply one mutation batch. Returns the touched bucket ids.
     *
+    * Fan-out policy: when `compactAfterDirs > 0` and this publish would
+    * leave the manifest over `compactAfterDirs` distinct batch dirs (each
+    * cold bucket pinned to the batch that last touched it), the batch
+    * rewrites EVERY live bucket under its own `b<batchId>`, not only the
+    * touched ones — one manifest swap both applies and compacts, and a
+    * reader's dirs-per-read stays bounded by the knob. The cost moves onto
+    * that batch: it becomes queryable after the full rewrite.
+    *
     * `streamBatchId` is the checkpoint-lineage id the retry-skip guard
-    * records (header `appliedBatch`) — pass it when the index id differs
-    * from the stream batch id (the even/odd auto-compaction scheme);
-    * defaults to `batchId` itself. `scheme` (when non-empty) is pinned
-    * into the header at every publish so lineage rules are enforceable.
+    * records (header `appliedBatch`) when a caller's index id differs from
+    * its stream batch id; it defaults to `batchId` itself. `scheme` is
+    * ignored; it stays for source compatibility with callers that pass it.
     * `beforePublish` runs on the calling thread after the bucket write and
     * right before the manifest swap; a throw from it aborts the publish
     * (the written batch dir is garbage a retry overwrites). It is not
@@ -168,67 +175,74 @@ object BucketedIndex {
   def applyBatch(spark: SparkSession, dir: String, batch: DataFrame,
                  batchId: Long, nBuckets: Int = 256,
                  streamBatchId: Long = -1L, scheme: String = "",
+                 compactAfterDirs: Int = 0,
                  beforePublish: () => Unit = () => ()): Seq[Int] = {
     val mark = if (streamBatchId >= 0) streamBatchId else batchId
     // Retry safety: a crash after publish but before the checkpoint commit
-    // redelivers the batch. The authoritative guard is the header's
-    // appliedBatch (last applied STREAM id): dir-id membership alone is
-    // defeated when a same-trigger compaction repointed the manifest at
-    // the compact dir — the redelivered batch would re-merge (content-
-    // idempotent) but overwrite-delete b<batchId>, a dir still referenced
-    // by a retained manifest version, transiently breaking the pinned-
-    // reader grace guarantee. Membership stays as the legacy fallback for
-    // pre-header manifests. Re-merging after a completed publish is also
-    // unsafe in itself: it reads the live dirs under b<batchId> while
-    // overwrite-deleting their parent (Spark's same-path check misses the
-    // ancestor relation). Already applied: skip.
-    val manifest0 = readManifest(dir)
+    // redelivers the batch. Re-merging after a completed publish is unsafe:
+    // it reads the live dirs under b<batchId> while overwrite-deleting
+    // their parent (Spark's same-path check misses the ancestor relation).
+    // The authoritative guard is the header's appliedBatch (last applied
+    // STREAM id). Dir-id membership alone misses a batch whose touched
+    // buckets all emptied (no bucket names it) and one whose dirs a later
+    // [[compact]] repointed away from; it stays only as the fallback for
+    // pre-header manifests. Already applied: skip.
+    val manifest = readManifest(dir)
     val lastApplied = readHeader(dir).get("appliedBatch").map(_.toLong)
     if (lastApplied.exists(_ >= mark) ||
-        (lastApplied.isEmpty && manifest0.values.exists(_ == batchId)))
-      return manifest0.collect { case (k, v) if v == batchId => k }.toSeq.sorted
+        (lastApplied.isEmpty && manifest.values.exists(_ == batchId)))
+      return manifest.collect { case (k, v) if v == batchId => k }.toSeq.sorted
     val folded = Merge.foldChanges(batch)
       .withColumn("bucket", bucketOf(nBuckets)).persist()
     try {
       val touched = folded.select("bucket").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted
       if (touched.isEmpty) return Seq.empty
-      val manifest = manifest0
-      val slice = readBuckets(spark, dir, manifest, touched)
-      val merged = Merge.mergeFolded(slice, folded.drop("bucket"))
-        .withColumn("bucket", bucketOf(nBuckets))
-      // repartition BY BUCKET before the partitioned write: without it
-      // every shuffle partition holding rows of a bucket writes its own
-      // file there (up to spark.sql.shuffle.partitions small files per
-      // bucket per publish — the read-amplification debt the round-15
-      // 100-batch soak measures). After it each touched bucket's state
-      // is exactly ONE file.
-      fp("apply.beforeBucketWrite")
-      merged.repartition(col("bucket")).write.mode("overwrite")
-        .partitionBy("bucket").parquet(s"$dir/batches/b$batchId")
-      fp("apply.bucketsWritten")
-      // buckets whose merged state is empty (all docs deleted) leave the
-      // manifest; partitionBy writes no dir for them
-      val live = FsOps.listDir(Paths.get(s"$dir/batches/b$batchId"))
-        .map(_.getFileName.toString).filter(_.startsWith("bucket="))
-        .map(_.stripPrefix("bucket=").toInt).toSet
-      val newManifest = (manifest -- touched) ++ touched.filter(live).map(_ -> batchId)
-      val header = Map("appliedBatch" -> mark.toString) ++
-        (if (scheme.nonEmpty) Map("scheme" -> scheme) else Map.empty)
-      beforePublish()
-      writeManifest(dir, newManifest, batchId, header)
-      fp("apply.published")
+      // counting b<batchId> as live makes the estimate an upper bound: a
+      // batch that empties every touched bucket only lowers the fan-out
+      val kept = manifest -- touched
+      val compacting = compactAfterDirs > 0 &&
+        (kept.values.toSet + batchId).size > compactAfterDirs
+      val rewritten = if (compacting) (manifest.keySet ++ touched).toSeq else touched
+      val merged = Merge.mergeFolded(readBuckets(spark, dir, manifest, rewritten),
+        folded.drop("bucket")).withColumn("bucket", bucketOf(nBuckets))
+      publish(dir, merged, batchId, manifest, rewritten,
+        Map("appliedBatch" -> mark.toString), beforePublish, "apply")
       touched
     } finally folded.unpersist()
   }
 
-  /** Maintenance compaction (SURVEY §4's deferred small-file job): fold
-    * EVERY live bucket into one consolidated batch dir `b<compactId>` and
-    * repoint the whole manifest at it. Long ingest histories leave the
-    * manifest fanned out over many old batch dirs (each cold bucket pinned
-    * to the batch that last touched it); a reader then globs one directory
-    * per bucket. Compaction collapses that to a single directory — the
-    * LSM major compaction, expressed as one partitioned parquet write.
+  /** The publish core of [[applyBatch]] and [[compact]]: write `rows` (with
+    * a `bucket` column) under `b<id>`, list the buckets that came out
+    * non-empty, and swap in `manifest` with every `rewritten` bucket
+    * repointed at `b<id>` (a rewritten bucket whose merged state is empty —
+    * all docs deleted — has no dir and leaves the manifest).
+    *
+    * The write repartitions BY BUCKET first: without it every shuffle
+    * partition holding rows of a bucket writes its own file there (up to
+    * spark.sql.shuffle.partitions small files per bucket per publish — the
+    * read-amplification debt the round-15 100-batch soak measures). After
+    * it each rewritten bucket's state is exactly ONE file. */
+  private def publish(dir: String, rows: DataFrame, id: Long, manifest: Map[Int, Long],
+                      rewritten: Seq[Int], header: Map[String, String],
+                      beforePublish: () => Unit, step: String): Unit = {
+    fp(s"$step.beforeBucketWrite")
+    rows.repartition(col("bucket")).write.mode("overwrite")
+      .partitionBy("bucket").parquet(s"$dir/batches/b$id")
+    fp(s"$step.bucketsWritten")
+    val live = FsOps.listDir(Paths.get(s"$dir/batches/b$id"))
+      .map(_.getFileName.toString).filter(_.startsWith("bucket="))
+      .map(_.stripPrefix("bucket=").toInt).toSet
+    beforePublish()
+    writeManifest(dir, (manifest -- rewritten) ++ rewritten.filter(live).map(_ -> id), id, header)
+    fp(s"$step.published")
+  }
+
+  /** Manual maintenance compaction (SURVEY §4's deferred small-file job):
+    * fold EVERY live bucket into one consolidated batch dir `b<compactId>`
+    * and repoint the whole manifest at it — the LSM major compaction,
+    * expressed as one partitioned parquet write. The streaming shell never
+    * calls it: its fan-out policy compacts inside [[applyBatch]].
     *
     * Crash-safe under the exact applyBatch manifest protocol:
     *  - crash BEFORE the swap: the manifest still references the old dirs
@@ -247,18 +261,10 @@ object BucketedIndex {
     if (manifest.values.exists(_ == compactId)) return // already published
     require(compactId > manifest.values.max,
       s"compactId $compactId must exceed every live batch id (${manifest.values.max})")
-    fp("compact.beforeDirWrite")
-    val full = read(spark, dir).withColumn("bucket", bucketOf(nBuckets))
-    full.repartition(col("bucket")).write.mode("overwrite")
-      .partitionBy("bucket").parquet(s"$dir/batches/b$compactId")
-    fp("compact.dirWritten")
-    val live = FsOps.listDir(Paths.get(s"$dir/batches/b$compactId"))
-      .map(_.getFileName.toString).filter(_.startsWith("bucket="))
-      .map(_.stripPrefix("bucket=").toInt).toSet
-    // compaction is not a stream batch: the header (appliedBatch, scheme)
-    // carries FORWARD unchanged so the retry-skip guard stays authoritative
-    writeManifest(dir, live.map(_ -> compactId).toMap, compactId, readHeader(dir))
-    fp("compact.published")
+    // compaction is not a stream batch: the header (appliedBatch) carries
+    // FORWARD unchanged so the retry-skip guard stays authoritative
+    publish(dir, readAt(spark, dir, manifest).withColumn("bucket", bucketOf(nBuckets)),
+      compactId, manifest, manifest.keys.toSeq, readHeader(dir), () => (), "compact")
   }
 
   /** Remove bucket dirs no longer referenced by the RETAINED manifests.

@@ -31,7 +31,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * There is one way mutations reach an index: [[startIncremental]] runs
   * [[applyIncrementalBatch]] per micro-batch. Per-batch cost is
-  * O(batch + touched buckets), never O(index).
+  * O(batch + touched buckets), not O(index), except for a batch that
+  * compacts under `compactAfterDirs`.
   */
 object Pipeline {
 
@@ -48,7 +49,7 @@ object Pipeline {
       vacuumEveryBatches: Int = 0, // GC superseded bucket versions every N batches (0 = never)
       sketchDir: Option[String] = None, // maintain per-day HDR/HLL sketch tables ([[SketchTable]])
       vacuumKeepManifests: Int = 1, // vacuum grace window: newest N manifest versions survive (readAt pinning)
-      compactAfterDirs: Int = 0) // auto-compact when the manifest fans out past N batch dirs (0 = manual only)
+      compactAfterDirs: Int = 0) // a batch rewrites every bucket when the manifest would fan out past N dirs (0 = never)
 
   object Config {
     /** Parse from string options (e.g. spark-submit --conf graft.*). The
@@ -83,12 +84,11 @@ object Pipeline {
     * one body. Public so the streaming shell, batch replays, and the
     * benchmark harness all drive the exact code.
     *
-    * With a quarantine or sketch dir the batch is persisted once and every
-    * branch derives its rows from that copy (one source scan per batch, not
-    * one per step). The quarantine write and the sketch update (each when
-    * its dir is set) run on their own threads, overlapped with the index
-    * fold and bucket write on the calling thread; with neither dir set the
-    * index is the only reader: no cache and no thread.
+    * The batch is persisted once and every branch derives its rows from
+    * that copy (one source scan per batch, not one per step). The
+    * quarantine write and the sketch update (each when its dir is set) run
+    * on their own threads, overlapped with the index fold and bucket write
+    * on the calling thread.
     * Publishes stay ordered by a barrier: the index waits for both side
     * branches right before its manifest swap and aborts on their failure,
     * so "index published" implies "sketches and quarantine published". The
@@ -97,38 +97,16 @@ object Pipeline {
     * StreamingSpec's crash-window cases). Every branch is joined before
     * this returns or throws, so no straggling writer races a redelivered
     * batch; a `StreamingQuery.stop()` that interrupts the stream thread
-    * cancels the side branches' jobs. */
+    * cancels the side branches' jobs.
+    *
+    * Every durable artefact of batch N is named N: quarantine `b<N>`,
+    * sketch `v<N>`, index `b<N>`. The index's fan-out policy
+    * (`compactAfterDirs`) lives in [[BucketedIndex.applyBatch]]: a batch
+    * that would fan the manifest out too far rewrites every live bucket in
+    * its own single publish. */
   def applyIncrementalBatch(spark: SparkSession, cfg: Config, batch: DataFrame,
                             batchId: Long, nBuckets: Int = 256): Unit = {
-    // Auto-compaction needs a compaction id FRESH against every batch id
-    // (BucketedIndex.compact's lineage rule) without colliding with the
-    // NEXT stream batch — a collision would trip applyBatch's retry-skip
-    // guard and silently drop that batch. With compaction enabled the
-    // index therefore maps stream batch N to even id 2N and compactions
-    // to odd 2N+1 (both monotone, disjoint). The mapping is a property of
-    // the index LINEAGE, pinned into the manifest header at first publish
-    // and enforced here, before any branch writes: flipping
-    // compactAfterDirs across 0 on a live index would re-use ids from the
-    // other scheme (e.g. indexId 2N colliding with an old plain batch dir)
-    // and silently skip batches.
-    val scheme = if (cfg.compactAfterDirs > 0) "evenOdd" else "plain"
-    val header = BucketedIndex.readHeader(cfg.indexDir)
-    header.get("scheme") match {
-      case Some(s) => require(s == scheme,
-        s"index ${cfg.indexDir} was born with id scheme '$s' but compactAfterDirs=" +
-          s"${cfg.compactAfterDirs} implies '$scheme' — the id lineages collide; " +
-          "pick the scheme at index birth (fresh dir + checkpoint)")
-      case None => require(
-        scheme == "plain" || BucketedIndex.readManifest(cfg.indexDir).isEmpty,
-        s"cannot enable compactAfterDirs on index ${cfg.indexDir}: its manifest " +
-          "predates the even/odd id scheme — indexId 2N can collide with an old " +
-          "plain batch id and silently skip a batch; start a fresh index dir")
-    }
-    val indexId = if (cfg.compactAfterDirs > 0) 2 * batchId else batchId
-    // each branch reads the batch: cache it when there is more than one
-    // (with the index alone, caching costs more than the one scan it saves)
-    val shared = cfg.quarantineDir.isDefined || cfg.sketchDir.isDefined
-    val once = if (shared) batch.persist() else batch
+    val once = batch.persist()
     try {
       val good = once.filter(!isMalformed)
       val side = new SideBranches(spark.sparkContext, batchId,
@@ -138,25 +116,14 @@ object Pipeline {
           cfg.sketchDir.map(sd => () =>
             SketchTable.updateForBatch(spark, sd, good, batchId)))
       try {
-        BucketedIndex.applyBatch(spark, cfg.indexDir, good, indexId, nBuckets,
-          streamBatchId = batchId, scheme = scheme, beforePublish = () => side.await())
+        BucketedIndex.applyBatch(spark, cfg.indexDir, good, batchId, nBuckets,
+          compactAfterDirs = cfg.compactAfterDirs, beforePublish = () => side.await())
         side.await() // a skipped or empty batch never reached the barrier
       } catch { case t: Throwable =>
         side.join(cancel = isInterrupt(t)).filter(_ ne t).foreach(t.addSuppressed)
         throw t
       }
-    } finally if (shared) once.unpersist()
-    // fan-out policy: when the manifest references more than
-    // compactAfterDirs distinct batch dirs (each cold bucket pinned to
-    // the batch that last touched it), fold the whole index into one
-    // consolidated dir — bounds a reader's dirs-per-read at the policy
-    // knob. Crash between applyBatch and compact converges: the next
-    // trigger re-evaluates fan-out and the half-written odd dir is
-    // vacuum garbage.
-    if (cfg.compactAfterDirs > 0 &&
-        BucketedIndex.readManifest(cfg.indexDir).values.toSet.size > cfg.compactAfterDirs) {
-      BucketedIndex.compact(spark, cfg.indexDir, compactId = 2 * batchId + 1, nBuckets)
-    }
+    } finally once.unpersist()
     // periodic GC of superseded bucket versions. Vacuum keeps the newest
     // vacuumKeepManifests manifest versions (the readAt grace window); a
     // reader pinned FURTHER back than that can still race it (the

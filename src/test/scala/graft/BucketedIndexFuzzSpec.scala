@@ -11,8 +11,9 @@ import scala.util.Random
   *
   * The hand-picked crash-window specs (BucketedIndexSpec) each pin ONE
   * window; here a seeded fuzzer drives the full `applyIncrementalBatch`
-  * trigger (merge → publish → auto-compact → vacuum) plus standalone
-  * vacuums, with a crash injected at a RANDOM fault point between durable
+  * trigger (merge, compacting when the fan-out policy fires → publish →
+  * vacuum) plus standalone vacuums, with a crash injected at a RANDOM
+  * fault point between durable
   * file-system effects ([[BucketedIndex.faultHook]]: mid-manifest-publish,
   * between bucket write and swap, mid-vacuum file deletes, …). A crashed
   * trigger is redelivered exactly as the checkpointed stream would
@@ -26,8 +27,8 @@ import scala.util.Random
   *   - the live read equals the sequential reference fold of the prefix
   *     (MergeModelSpec's simulate model);
   *   - a manifest pinned at a completed publish still reads that exact
-  *     snapshot one trigger (≤ 2 publishes) later, inside the vacuum
-  *     grace window;
+  *     snapshot one trigger (one publish) later, inside the vacuum grace
+  *     window;
   *   - the version log parses and stays strictly monotone;
   *   - a final vacuum to keepLast=1 removes garbage without touching state.
   */
@@ -79,9 +80,9 @@ class BucketedIndexFuzzSpec extends AnyFunSuite with SparkTestBase {
       }
     }
     // schedule-level knobs: auto-compaction on/off+threshold, periodic
-    // vacuum cadence, grace window ≥ 3 (one trigger = ≤ 2 publishes, so a
-    // pin checked one trigger later is always inside the window), buckets
-    // down to 1 (max key co-location — the overwrite-while-reading regime)
+    // vacuum cadence, grace window ≥ 3 (one trigger = one publish, so a pin
+    // checked one trigger later is always inside the window), buckets down
+    // to 1 (max key co-location — the overwrite-while-reading regime)
     val cfg = Pipeline.Config(
       changeLogDir = "unused", indexDir = dir, checkpointDir = "unused",
       vacuumEveryBatches = Seq(0, 1, 2)(rnd.nextInt(3)),

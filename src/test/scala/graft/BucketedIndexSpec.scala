@@ -196,22 +196,33 @@ class BucketedIndexSpec extends AnyFunSuite with SparkTestBase {
       vacuumEveryBatches = 3, vacuumKeepManifests = 2, compactAfterDirs = 4)
     val log = randomLog(400, seed = 31)
     val chunks = log.grouped(10).toSeq // 40 trickle batches
+    var compactions = 0
     chunks.zipWithIndex.foreach { case (c, i) =>
+      val logBefore = BucketedIndex.manifestVersions(dir)
       Pipeline.applyIncrementalBatch(spark, cfg, mutDf(c), i, nBuckets = 16)
-      val fanOut = BucketedIndex.readManifest(dir).values.toSet.size
+      val manifest = BucketedIndex.readManifest(dir)
+      val fanOut = manifest.values.toSet.size
       assert(fanOut <= cfg.compactAfterDirs,
         s"batch $i: manifest fans out over $fanOut dirs (policy ${cfg.compactAfterDirs})")
+      // one publish per trigger, named with the stream batch id — a
+      // compacting trigger included
+      val published = BucketedIndex.manifestVersions(dir).filterNot(logBefore.toSet)
+      assert(published == Seq(i.toLong), s"batch $i published versions $published")
+      // ≤ 10 keys touch ≤ 10 buckets: every bucket at b<i> past that count
+      // means the batch rewrote buckets it never touched, i.e. compacted
+      if (manifest.values.forall(_ == i) && manifest.size > c.map(_.row_key).distinct.size)
+        compactions += 1
     }
+    assert(compactions > 0, "fixture never triggered auto-compaction — weaken compactAfterDirs")
     assert(indexMap(BucketedIndex.read(spark, dir)) == indexMap(Merge.fold(mutDf(log))),
       "auto-compacted state diverged from the one-shot fold")
-    // compaction ids are odd (2N+1), stream ids even (2N): a RETRY of the
-    // last batch must hit the skip guard, not re-merge over its own dirs
+    // a RETRY of the last batch must hit the skip guard, not re-merge over
+    // its own dirs
     val before = indexMap(BucketedIndex.read(spark, dir))
+    val logBefore = BucketedIndex.manifestVersions(dir)
     Pipeline.applyIncrementalBatch(spark, cfg, mutDf(chunks.last), chunks.size - 1, nBuckets = 16)
     assert(indexMap(BucketedIndex.read(spark, dir)) == before)
-    // the policy actually fired at least once (odd id in the lineage)
-    assert(BucketedIndex.manifestVersions(dir).exists(_ % 2 == 1),
-      "fixture never triggered auto-compaction — weaken compactAfterDirs")
+    assert(BucketedIndex.manifestVersions(dir) == logBefore)
   }
 
   test("manifest tmp leftover from a crashed publish: log still parses, next publish sweeps it") {
@@ -236,9 +247,9 @@ class BucketedIndexSpec extends AnyFunSuite with SparkTestBase {
     val cfg = Pipeline.Config(
       changeLogDir = "unused", indexDir = dir, checkpointDir = "unused",
       vacuumKeepManifests = 4, compactAfterDirs = 1)
-    // fan-out after every batch ≥ 2 ({prev compact id, new even id}) > 1 →
-    // EVERY trigger from batch 1 on also runs compact(2N+1), repointing
-    // every bucket at the odd id — the exact redelivery hazard window
+    // from batch 1 on, every publish would leave ≥ 2 dirs ({previous
+    // batch, this batch}) > 1, so EVERY trigger rewrites every live bucket
+    // under its own b<N> in its one publish
     val chunks = (0 until 6).map(i =>
       Seq(mut(s"k$i", "U", s"2024-01-01 00:00:0$i", i, ("f", "a", s"$i"))))
     chunks.zipWithIndex.foreach { case (c, i) =>
@@ -246,63 +257,25 @@ class BucketedIndexSpec extends AnyFunSuite with SparkTestBase {
     }
     val lastId = chunks.size - 1L
     val manifest = BucketedIndex.readManifest(dir)
-    assert(manifest.values.forall(_ % 2 == 1),
-      "fixture did not end on a same-trigger compaction — tune compactAfterDirs")
-    assert(!manifest.values.exists(_ == 2 * lastId),
-      "fixture invalid: membership guard would catch this redelivery anyway")
+    assert(manifest.values.toSet == Set(lastId) && manifest.size > 1,
+      s"fixture did not end on a compacting trigger: $manifest")
+    assert(BucketedIndex.readHeader(dir).get("appliedBatch").contains(lastId.toString))
     val state = indexMap(BucketedIndex.read(spark, dir))
     def partFiles(id: Long) = Files.walk(Paths.get(dir, "batches", s"b$id"))
       .iterator().asScala.map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet
-    val evenBefore = partFiles(2 * lastId)
+    val filesBefore = partFiles(lastId)
     val logBefore = BucketedIndex.manifestVersions(dir)
     // crash before the checkpoint commit → the stream redelivers batch N.
-    // Pre-fix: the manifest references only 2N+1, so the dir-id membership
-    // guard misses, the batch re-merges and overwrite-deletes b<2N> — a dir
-    // still referenced by retained manifest m<2N> (pinned-reader grace hole)
+    // The appliedBatch guard must skip it: a re-merge would read every
+    // bucket under b<N> while overwrite-deleting b<N> itself
     Pipeline.applyIncrementalBatch(spark, cfg, mutDf(chunks.last), lastId, nBuckets = 8)
-    assert(partFiles(2 * lastId) == evenBefore, "redelivery rewrote the published even dir")
+    assert(partFiles(lastId) == filesBefore, "redelivery rewrote the published dir")
     assert(BucketedIndex.readManifest(dir) == manifest, "redelivery moved the manifest")
     assert(BucketedIndex.manifestVersions(dir) == logBefore)
     assert(indexMap(BucketedIndex.read(spark, dir)) == state)
-    // and a reader pinned at the even version still reads clean
-    val pinned = BucketedIndex.readManifestAt(dir, 2 * lastId)
-    assert(indexMap(BucketedIndex.readAt(spark, dir, pinned)) == state)
-  }
-
-  test("id scheme is pinned at index birth; flipping compactAfterDirs is rejected loudly") {
-    import graft.streaming.Pipeline
-    val dir = tmp()
-    val plain = Pipeline.Config(
-      changeLogDir = "unused", indexDir = dir, checkpointDir = "unused")
-    Pipeline.applyIncrementalBatch(spark, plain,
-      mutDf(Seq(mut("k1", "U", "2024-01-01 00:00:00", 1, ("f", "a", "1")))), 0, nBuckets = 4)
-    val flipped = plain.copy(compactAfterDirs = 2)
-    val e1 = intercept[IllegalArgumentException] {
-      Pipeline.applyIncrementalBatch(spark, flipped,
-        mutDf(Seq(mut("k2", "U", "2024-01-01 00:00:01", 2, ("f", "a", "2")))), 1, nBuckets = 4)
-    }
-    assert(e1.getMessage.contains("scheme"))
-    // and the reverse flip on an evenOdd-born index
-    val dir2 = tmp()
-    val eo = plain.copy(indexDir = dir2, compactAfterDirs = 2)
-    Pipeline.applyIncrementalBatch(spark, eo,
-      mutDf(Seq(mut("k1", "U", "2024-01-01 00:00:00", 1, ("f", "a", "1")))), 0, nBuckets = 4)
-    val e2 = intercept[IllegalArgumentException] {
-      Pipeline.applyIncrementalBatch(spark, eo.copy(compactAfterDirs = 0),
-        mutDf(Seq(mut("k2", "U", "2024-01-01 00:00:01", 2, ("f", "a", "2")))), 1, nBuckets = 4)
-    }
-    assert(e2.getMessage.contains("scheme"))
-    // legacy pre-header manifest (no #appliedBatch/#scheme lines): enabling
-    // compaction must be rejected — indexId 2N can collide with an old
-    // plain batch id and silently skip a batch
-    val dir3 = tmp()
-    Files.createDirectories(Paths.get(dir3))
-    Files.writeString(Paths.get(dir3, "_MANIFEST"), "0=0")
-    val e3 = intercept[IllegalArgumentException] {
-      Pipeline.applyIncrementalBatch(spark, eo.copy(indexDir = dir3),
-        mutDf(Seq(mut("k1", "U", "2024-01-01 00:00:00", 1, ("f", "a", "1")))), 1, nBuckets = 4)
-    }
-    assert(e3.getMessage.contains("predates"))
+    // and a reader pinned at the previous version still reads clean
+    val pinned = BucketedIndex.readManifestAt(dir, lastId - 1)
+    assert(indexMap(BucketedIndex.readAt(spark, dir, pinned)) == state - s"k$lastId")
   }
 
   test("vacuum removes superseded bucket versions, state still readable") {
